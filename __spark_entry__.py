@@ -24,14 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from melodist_spark.util.planmemo import PlanMemo
-
-# round 14 (§5 driver latency): the variant-union rows build deep
-# BY-NAME expression trees (sine batteries, vapor-pressure ratios,
-# explode-of-structs) costing 1-3k py4j round-trips per build; they
-# are context-free, so one build per application suffices — same
-# policy as the operator-level memos in util.planmemo.
-_ENTRY_EXPR_MEMO = PlanMemo()
+from melodist_spark.util.planmemo import MEMO
 
 LON, LAT, TZ = 8.86, 51.0, 1.0
 
@@ -41,23 +34,13 @@ LON, LAT, TZ = 8.86, 51.0, 1.0
 # query's "planning" wall is Python-side expression construction, not
 # Catalyst), and every met query starts from the identical
 # _met_hourly/_met_daily subplan. DataFrames are immutable, so the
-# built object is safely reusable; the key includes applicationId so
-# a fresh SparkContext in the same process never sees another
-# context's frames.
-_FRAME_CACHE: dict = {}
-
-
-def _frame_memo(spark: SparkSession, sf_dir: str, kind: str, build):
-    k = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _FRAME_CACHE.get(k)
-    if df is None:
-        df = build()
-        _FRAME_CACHE[k] = df
-    return df
-
-
+# built object is safely reusable; the shared memo keys it by
+# applicationId, so a fresh SparkContext in the same process never
+# sees another context's frames. The variant-union rows' deep by-name
+# expression trees (1-3k py4j round-trips per build) use the same
+# memo.
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _frame_memo(spark, sf_dir, "events", lambda: _events_build(spark, sf_dir))
+    return MEMO.get(("frame", sf_dir, "events"), lambda: _events_build(spark, sf_dir))
 
 
 def _events_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,8 +58,8 @@ def _events_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _met_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _frame_memo(
-        spark, sf_dir, "met_hourly", lambda: _met_hourly_build(spark, sf_dir)
+    return MEMO.get(
+        ("frame", sf_dir, "met_hourly"), lambda: _met_hourly_build(spark, sf_dir)
     )
 
 
@@ -103,7 +86,7 @@ def _met_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return daily_from_hourly(_met_hourly(spark, sf_dir), keys=["user_id"])
 
-    return _frame_memo(spark, sf_dir, "met_daily", build)
+    return MEMO.get(("frame", sf_dir, "met_daily"), build)
 
 
 _MET_HOURLY_SQL = """
@@ -144,140 +127,6 @@ def q_temp_sine_disagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_daily_from_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly→daily downsample with per-variable semantics
-    (`util/util.py:374-414`)."""
-    d = _met_daily(spark, sf_dir)
-    return d.select(
-        "user_id",
-        "date",
-        F.round("temp", 6).alias("temp"),
-        F.round("tmin", 6).alias("tmin"),
-        F.round("tmax", 6).alias("tmax"),
-        F.round("precip", 3).alias("precip"),
-        F.round("hum", 6).alias("hum"),
-    )
-
-
-def q_distribute_equally(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily precip equally distributed over 24 h, sums preserved
-    (`util/util.py:46-67`)."""
-    from melodist_spark.util.calendar import distribute_equally
-
-    daily = _met_daily(spark, sf_dir).select("user_id", "date", "precip")
-    out = distribute_equally(daily, "precip", divide=True)
-    return out.select("user_id", "ts", F.round("precip", 6).alias("precip_h"))
-
-
-def q_seasonal_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-predicate filter (`precipitation.py:607-628`)."""
-    from melodist_spark.util.calendar import seasonal_subset
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = seasonal_subset(orders, [3, 4, 5], ts_col="o_orderdate")
-    return out.select("o_orderkey", "o_orderdate", F.round("o_totalprice", 2).alias("price"))
-
-
-def q_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighbour-day values with edge fill — the temperature locdf
-    pattern (`temperature.py:115-122`)."""
-    from pyspark.sql import Window
-
-    daily = _met_daily(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("date")
-    nxt_ok = F.datediff(F.lead("date", 1).over(w), F.col("date")) == 1
-    prv_ok = F.datediff(F.col("date"), F.lag("date", 1).over(w)) == 1
-    tmin_next = F.when(F.lead("date", 1).over(w).isNull(), F.col("tmin")).otherwise(
-        F.when(nxt_ok, F.lead("tmin", 1).over(w))
-    )
-    tmin_prev = F.when(F.lag("date", 1).over(w).isNull(), F.col("tmin")).otherwise(
-        F.when(prv_ok, F.lag("tmin", 1).over(w))
-    )
-    return daily.select(
-        "user_id",
-        "date",
-        F.round("tmin", 6).alias("tmin"),
-        F.round(tmin_next, 6).alias("tmin_next"),
-        F.round(tmin_prev, 6).alias("tmin_prev"),
-    )
-
-
-def q_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running sum per user (cascade regridding primitive,
-    `precipitation.py:292-303`)."""
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return e.select(
-        "event_id", "user_id", F.round(F.sum("value").over(w), 3).alias("run_sum")
-    )
-
-
-def q_day_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day fraction — the master-station pattern
-    (`precipitation.py:399-400`)."""
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir)
-    wd = Window.partitionBy("user_id", F.to_date("ts"))
-    return e.select(
-        "event_id",
-        F.round(F.col("value") / F.sum("value").over(wd), 6).alias("day_frac"),
-    )
-
-
-def q_gap_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap detection per key (`util/util.py:249-297`)."""
-    from melodist_spark.util.gaps import detect_gaps
-
-    e = _events(spark, sf_dir).select("user_id", "ts")
-    return detect_gaps(e, 3600, keys=["user_id"]).select(
-        "user_id", F.col("n_gaps").cast("long").alias("n_gaps")
-    )
-
-
-def q_complete_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-completeness filter (the drop_incomplete_days idea,
-    `util/util.py:300-352`): keep (user, day) with events in ≥ 3
-    distinct hours."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy("user_id", F.to_date("ts").alias("date"))
-        .agg(F.countDistinct(F.hour("ts")).alias("nh"))
-        .filter(F.col("nh") >= 3)
-        .select("user_id", "date", F.col("nh").cast("long").alias("nh"))
-    )
-
-
-def q_vapor_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sonntag vapor pressure, both branches (`util/util.py:70-102`)."""
-    from melodist_spark.functions.meteo import vapor_pressure
-
-    m = _met_hourly(spark, sf_dir)
-    return m.select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.round(vapor_pressure(F.col("temp"), F.col("hum")), 6).alias("vp"),
-    )
-
-
-def q_dewpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dewpoint temperature (`util/util.py:105-134`)."""
-    from melodist_spark.functions.meteo import dewpoint_temperature
-
-    m = _met_hourly(spark, sf_dir)
-    return m.select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.round(dewpoint_temperature(F.col("temp"), F.col("hum")), 6).alias("td"),
-    )
-
-
 def q_sun_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sunrise/noon/sunset/daylength (`util/util.py:160-246`)."""
     from melodist_spark.functions.solar import sun_times_exprs
@@ -294,42 +143,6 @@ def q_sun_times(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(e["sunnoon"], 6).alias("sunnoon"),
         F.round(e["sunset"], 6).alias("sunset"),
         F.round(e["daylength"], 6).alias("daylength"),
-    )
-
-
-def q_pot_radiation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Liston & Elder potential radiation (`radiation.py:104-204`)."""
-    from melodist_spark.functions.solar import potential_radiation
-
-    e = _events(spark, sf_dir)
-    return e.select(
-        "event_id",
-        F.round(potential_radiation(F.col("ts"), LON, LAT, TZ), 6).alias("pot_rad"),
-    )
-
-
-def q_linregress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form OLS per user — dewpoint-regression pattern
-    (`util/util.py:137-157`, `humidity.py:123-130`)."""
-    e = _events(spark, sf_dir).withColumn("hour", F.hour("ts").cast("double"))
-    slope = F.covar_samp("hour", "value") / F.var_samp("hour")
-    return e.groupBy("user_id").agg(
-        F.round(slope, 6).alias("a1"),
-        F.round(F.avg("value") - slope * F.avg("hour"), 6).alias("a0"),
-    )
-
-
-def q_mean_course(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean diurnal course by month (`util/util.py:417-430`)."""
-    from melodist_spark.operators.aggregations import mean_daily_course_by_month
-
-    m = _met_hourly(spark, sf_dir).select("user_id", "ts", F.col("temp").alias("v"))
-    out = mean_daily_course_by_month(m, "v", keys=["user_id"])
-    return out.select(
-        "user_id",
-        F.col("month").cast("long").alias("month"),
-        F.col("hour").cast("long").alias("hour"),
-        F.round("value", 6).alias("course"),
     )
 
 
@@ -369,37 +182,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup groups via content digest."""
-    from melodist_spark.pipeline.dedup import exact_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return exact_duplicates(docs).select("digest", "n_docs", "keep_id")
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive content fingerprint (token-set md5)."""
-    from melodist_spark.pipeline.text import fingerprint
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + quality scoring features."""
-    from melodist_spark.pipeline.text import quality_features
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = quality_features(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.round("mean_word_len", 6).alias("mean_word_len"),
-        F.round("stopword_ratio", 6).alias("stopword_ratio"),
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-    )
-
-
 #: deterministic non-Latin probes for the script-ID differential (the
 #: corpus is ASCII, so rows doc_id % 5 == 0 are swapped for one of
 #: these, rotating by doc_id % 3 — script_pred then genuinely varies)
@@ -410,43 +192,9 @@ _SCRIPT_PROBES = (
 )
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-based language-ID scores (en/de/es) PLUS Unicode
-    script-range detection (round 7): per-script character counts and
-    the argmax ``script_pred`` over a probe column where every fifth
-    doc is swapped for a rotating Cyrillic/CJK/Arabic snippet — the
-    writing-system signal stopword lists cannot give. Script classes
-    are literal-char ranges that parse identically in Java regex and
-    RE2, so the DuckDB oracle runs the very same class strings."""
-    from melodist_spark.pipeline.text import detect_script, language_scores
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    probe = F.when(
-        F.col("doc_id") % 5 == 0,
-        F.when(F.col("doc_id") % 3 == 0, F.lit(_SCRIPT_PROBES[0]))
-        .when(F.col("doc_id") % 3 == 1, F.lit(_SCRIPT_PROBES[1]))
-        .otherwise(F.lit(_SCRIPT_PROBES[2])),
-    ).otherwise(F.col("text"))
-    scores = language_scores(F.col("text"))
-    out = detect_script(docs.withColumn("__probe", probe), "__probe")
-    return out.select(
-        "doc_id",
-        scores["score_en"].cast("long").alias("score_en"),
-        scores["score_de"].cast("long").alias("score_de"),
-        scores["score_es"].cast("long").alias("score_es"),
-        F.col("n_latin").cast("long").alias("n_latin"),
-        F.col("n_cyrillic").cast("long").alias("n_cyrillic"),
-        F.col("n_cjk").cast("long").alias("n_cjk"),
-        F.col("n_arabic").cast("long").alias("n_arabic"),
-        F.col("n_kana").cast("long").alias("n_kana"),
-        F.col("n_hangul").cast("long").alias("n_hangul"),
-        "script_pred",
-    )
-
-
 def _script_probe_sql() -> str:
-    """The lang_id probe column as DuckDB SQL (mirror of the Spark
-    CASE in q_lang_id)."""
+    """The script-ID probe column as DuckDB SQL (mirror of the Spark
+    CASE in q_text_features)."""
     p = _SCRIPT_PROBES
     return (
         "CASE WHEN doc_id % 5 = 0 THEN "
@@ -480,27 +228,6 @@ def _script_pred_sql() -> str:
         f"WHEN sc.n_{s} = {g} THEN '{s}'" for s in reversed(scripts)
     )
     return f"CASE WHEN {g} <= 0 THEN 'und' {arms} END"
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash document fingerprints (near-dup primitive)."""
-    from melodist_spark.pipeline.text import simhash
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = simhash(docs)
-    return out.select("doc_id", F.col("simhash").cast("long").alias("simhash"))
-
-
-def q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature LSH bands (shingle→minhash→band)."""
-    from melodist_spark.pipeline.dedup import lsh_bands, minhash_signature
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sigs = minhash_signature(docs, num_hashes=8)
-    bands = lsh_bands(sigs, num_hashes=8, band_size=2)
-    return bands.select(
-        "doc_id", F.col("band_idx").cast("long").alias("band_idx"), "band_hash"
-    )
 
 
 def q_embedding_topk(
@@ -1400,34 +1127,6 @@ def oracle_sql() -> dict[str, str]:
         FROM res
     """
 
-    pot_rad_sql = f"""
-        WITH e AS (
-          SELECT event_id,
-                 CAST(dayofyear(ts) AS DOUBLE) AS doy,
-                 CAST(hour(ts) AS DOUBLE) AS h,
-                 CAST(minute(ts) AS DOUBLE) AS mi
-          FROM events
-        ),
-        a AS (
-          SELECT event_id,
-                 radians(23.43697) * cos(2.0*{pi}*(doy - 173.0)/365.25) AS decl,
-                 {pi} * (((h + mi/60.0 + ({LON} - {TZ}*15.0)*24.0/360.0) / 12.0) - 1.0) AS ha,
-                 2.0*{pi}*(doy/365.25) AS beta
-          FROM e
-        ),
-        b AS (
-          SELECT event_id, beta,
-                 greatest(sin(decl)*sin(radians({LAT}))
-                          + cos(decl)*cos(radians({LAT}))*cos(ha), 0.0) AS cz
-          FROM a
-        )
-        SELECT event_id,
-               round(1367.0 * (1.00011 + 0.034221*cos(beta) + 0.00128*sin(beta)
-                             + 0.000719*cos(2.0*beta) + 0.000077*sin(2.0*beta))
-                     * ((0.6 + 0.2*cz) * cz + 0.0), 6) AS pot_rad
-        FROM b
-    """
-
     temp_sine_sql = f"""
         WITH daily AS ({_MET_DAILY_SQL}),
         loc AS (
@@ -1462,49 +1161,6 @@ def oracle_sql() -> dict[str, str]:
                round((minv + (maxv - minv)/2.0)
                      + (maxv - minv)/2.0 * cos(2*{pi}/24.0 * (h - 14)), 6) AS temp_h
         FROM vals
-    """
-
-    simhash_sql = """
-        WITH toks AS (
-          SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-          FROM documents
-        ),
-        contrib AS (
-          SELECT t.doc_id, b.b,
-                 sum(CASE WHEN substr(md5(t.w), b.b + 1, 1) IN
-                          ('1','3','5','7','9','b','d','f')
-                     THEN 1 ELSE -1 END) AS s
-          FROM toks t
-          CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS b) b
-          GROUP BY 1, 2
-        )
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN CAST(power(2, b) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-        FROM contrib GROUP BY doc_id
-    """
-
-    minhash_sql = """
-        WITH toks AS (
-          SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-          FROM documents
-        ),
-        h AS (
-          SELECT doc_id,
-                 ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
-                 ('0x' || substr(md5(w), 17, 15))::BIGINT % 36028797018963968 AS h2
-          FROM toks
-        ),
-        sigs AS (
-          SELECT doc_id, i.i, min(h1 + i.i * h2) AS sig
-          FROM h CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i) i
-          GROUP BY 1, 2
-        )
-        SELECT a.doc_id,
-               CAST(a.i // 2 AS BIGINT) AS band_idx,
-               md5(CAST(a.sig AS VARCHAR) || '|' || CAST(b.sig AS VARCHAR)) AS band_hash
-        FROM sigs a JOIN sigs b
-          ON a.doc_id = b.doc_id AND b.i = a.i + 1
-        WHERE a.i % 2 = 0
     """
 
     topk_sql = """
@@ -1647,77 +1303,24 @@ def oracle_sql() -> dict[str, str]:
         )
     """
 
-    bc_sql = f"""
-        WITH daily AS ({_MET_DAILY_SQL}),
-        l AS (
-          SELECT user_id, date, tmin, tmax,
-                 CASE WHEN lead(date) OVER w IS NULL THEN tmin
-                      WHEN date_diff('day', date, lead(date) OVER w) = 1 THEN lead(tmin) OVER w
-                      END AS tmin_next
-          FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY date)
-        ),
-        d AS (
-          SELECT user_id, date,
-                 tmax - (tmin + coalesce(tmin_next, tmin)) / 2.0 AS dT
-          FROM l
-        ),
-        b AS (
-          SELECT user_id, date, dT,
-                 0.036 * exp(-0.154 * avg(dT) OVER (PARTITION BY user_id, month(date))) AS B
-          FROM d
-        )
-        SELECT user_id, date,
-               round(CASE WHEN isnan(0.75 * (1 - exp(-B * power(dT, 2.4))) * 250.0)
-                     THEN NULL
-                     ELSE 0.75 * (1 - exp(-B * power(dT, 2.4))) * 250.0 END, 6) AS bc_rad
-        FROM b
-    """
-
-    sun_daylength = f"""
-          SELECT date,
-                 12.0*(1.0 + acos(-tan(radians({LAT})) * tan(
-                     radians(0.3723 + 23.2567*sin(radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             - 0.7580*cos(radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.1149*sin(2*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.3656*cos(2*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             - 0.1712*sin(3*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.0201*cos(3*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))))) / pi())
-                 - (12.0*(1.0 - acos(-tan(radians({LAT})) * tan(
-                     radians(0.3723 + 23.2567*sin(radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             - 0.7580*cos(radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.1149*sin(2*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.3656*cos(2*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             - 0.1712*sin(3*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))
-                             + 0.0201*cos(3*radians((360.0/365.25)*(CAST(dayofyear(date) AS DOUBLE) - 79.346)))))) / pi())) AS daylength
-    """
-
     from melodist_spark.pipeline.similarity import _hyperplane
 
-    bucket_terms = []
-    for p in range(12):
-        plane = _hyperplane(64, p)
-        arr = "[" + ",".join(repr(v) for v in plane) + "]"
-        bucket_terms.append(
-            f"CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {arr}) > 0 "
-            f"THEN {1 << p} ELSE 0 END"
-        )
-    bucket_sql = f"""
-        SELECT vec_id, CAST({' + '.join(bucket_terms)} AS BIGINT) AS bucket
-        FROM embeddings
-    """
+    def lsh_bucket(n_planes: int) -> str:
+        """The random-hyperplane LSH bucket of ``embedding``: one
+        literal list_dot_product sign term per md5-derived plane."""
+        terms = []
+        for p in range(n_planes):
+            arr = "[" + ",".join(repr(v) for v in _hyperplane(64, p)) + "]"
+            terms.append(
+                f"CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {arr}) > 0 "
+                f"THEN {1 << p} ELSE 0 END"
+            )
+        return f"CAST({' + '.join(terms)} AS BIGINT)"
 
-    bucket_terms8 = []
-    for p in range(8):
-        plane = _hyperplane(64, p)
-        arr = "[" + ",".join(repr(v) for v in plane) + "]"
-        bucket_terms8.append(
-            f"CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {arr}) > 0 "
-            f"THEN {1 << p} ELSE 0 END"
-        )
     neardup_sql = f"""
         WITH b AS (
           SELECT vec_id, embedding,
-                 CAST({' + '.join(bucket_terms8)} AS BIGINT) AS bucket
+                 {lsh_bucket(8)} AS bucket
           FROM embeddings
         ),
         pairs AS (
@@ -2304,13 +1907,6 @@ LEFT JOIN pstat p ON b.doc_id = p.doc_id
 LEFT JOIN tops t ON b.doc_id = t.doc_id
 LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
         """,
-        "humidity_equal": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id,
-                   CAST(date AS TIMESTAMP) + to_hours(h.h) AS ts,
-                   round(least(greatest(hum, 0.0), 100.0), 6) AS hum_h
-            FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
-        """,
         "wind_variants": f"""
             WITH daily AS (
               SELECT user_id, date, hum / 10.0 AS wind
@@ -2327,25 +1923,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             SELECT 'cosine' AS method, user_id, ts,
                    round(0.4 * wind * cos(pi() * (h - 2.0) / 12.0) + 1.0 * wind, 6) AS wind_h
             FROM grid
-        """,
-        "calendar_fill": f"""
-            WITH daily AS ({_MET_DAILY_SQL}),
-            rng AS (SELECT user_id, min(date) AS d0, max(date) AS d1 FROM daily GROUP BY 1),
-            cal AS (
-              SELECT user_id, CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-                                  CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS date
-              FROM rng
-            )
-            SELECT c.user_id, c.date,
-                   round(coalesce(d.precip, 0.0), 3) AS precip_f
-            FROM cal c LEFT JOIN daily d ON c.user_id = d.user_id AND c.date = d.date
-        """,
-        "ffill": """
-            SELECT event_id,
-                   round(last_value(CASE WHEN value > 50 THEN value END IGNORE NULLS)
-                         OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS v_ff
-            FROM events
         """,
         "interpolate": f"""
             WITH daily AS ({_MET_DAILY_SQL}),
@@ -2378,14 +1955,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
                          WHEN pp IS NOT NULL THEN pv
                          END, 6) AS v_i
             FROM f
-        """,
-        "bristow_campbell": bc_sql,
-        "angstroem": f"""
-            WITH daily AS ({_MET_DAILY_SQL}),
-            s AS ({sun_daylength} FROM (SELECT DISTINCT date FROM daily) d)
-            SELECT daily.user_id, daily.date,
-                   round((0.25 + 0.5 * (hum - floor(hum / 10.0) * 10.0) / s.daylength) * 300.0, 6) AS glob_day
-            FROM daily JOIN s ON daily.date = s.date
         """,
         "validation_metrics": """
             WITH d AS (
@@ -2762,7 +2331,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             FROM agg a
             CROSS JOIN (VALUES ('exact'), ('bloom')) AS m(method)
         """,
-        "embedding_bucket": bucket_sql,
         "humidity_dewpoint": (f"""
             {_TEMP_SINE_CORE_SQL},
             met AS ({_MET_HOURLY_SQL}),
@@ -2936,51 +2504,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
                        100.0 * (CASE WHEN tdew >= 273.15 THEN 6.112 * exp(17.62*(tdew-273.15)/(243.12+tdew-273.15)) ELSE 6.112 * exp(22.46*(tdew-273.15)/(272.62+tdew-273.15)) END) / (CASE WHEN temp_raw >= 273.15 THEN 6.112 * exp(17.62*(temp_raw-273.15)/(243.12+temp_raw-273.15)) ELSE 6.112 * exp(22.46*(temp_raw-273.15)/(272.62+temp_raw-273.15)) END), 0.0), 100.0) END, 6) AS hum_h
             FROM scaffold
         """,
-        "temp_sine_mean": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id,
-                   CAST(date AS TIMESTAMP) + to_hours(h.h) AS ts,
-                   round(temp + (tmax - tmin)/2.0 * cos(2*pi()/24.0 * (h.h - 14)), 6) AS temp_h
-            FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
-        """,
-        "temp_sine_night": f"""
-            WITH daily_t AS ({_MET_DAILY_SQL}),
-            loc_t AS (
-              SELECT user_id, date, tmin, tmax,
-                     CASE WHEN lead(date) OVER w IS NULL THEN tmin
-                          WHEN date_diff('day', date, lead(date) OVER w) = 1 THEN lead(tmin) OVER w
-                          END AS min_val_next,
-                     CASE WHEN lag(date) OVER w IS NULL THEN tmax
-                          WHEN date_diff('day', lag(date) OVER w, date) = 1 THEN lag(tmax) OVER w
-                          END AS max_val_before
-              FROM daily_t
-              WINDOW w AS (PARTITION BY user_id ORDER BY date)
-            ),
-            hourly_t AS (
-              SELECT l.*, h.h,
-                     CAST(l.date AS TIMESTAMP) + to_hours(h.h) AS ts
-              FROM loc_t l CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
-            ),
-            vals AS (
-              SELECT user_id, ts, h,
-                     CASE WHEN h < 14 THEN tmin ELSE min_val_next END AS minv,
-                     CASE WHEN h < 7 THEN max_val_before ELSE tmax END AS maxv
-              FROM hourly_t
-            ),
-            pieces AS (
-              SELECT user_id, ts, h,
-                     minv + (maxv - minv)/2.0 AS vt,
-                     (maxv - minv)/2.0 AS hd
-              FROM vals
-            )
-            SELECT user_id, ts,
-                   round(CASE
-                     WHEN h <= 7 THEN vt + hd * cos(pi()/17.0 * (10 + h))
-                     WHEN h < 14 THEN vt + hd * cos(1.25*pi() + 0.75*pi()/7.0 * (h - 7))
-                     ELSE vt + hd * cos(pi()/17.0 * (h - 14))
-                   END, 6) AS temp_h
-            FROM pieces
-        """,
         "temp_sine_variants": f"""
             SELECT user_id, ts, 'mean' AS method, temp_h FROM (
               WITH daily AS ({_MET_DAILY_SQL})
@@ -3048,15 +2571,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
                             d.hum_max + (t.temp_raw - d.tmin) / (d.tmax - d.tmin)
                                       * (d.hum_min - d.hum_max),
                             0.0), 100.0) END, 6) AS hum_h
-            FROM temp_core t
-            JOIN daily_t d ON t.user_id = d.user_id AND t.date = d.date
-        """,
-        "humidity_minimal": f"""
-            {_TEMP_SINE_CORE_SQL}
-            SELECT t.user_id, t.ts,
-                   round(CASE WHEN t.temp_raw IS NULL THEN NULL
-                         ELSE least(greatest(
-                       100.0 * (CASE WHEN d.tmin >= 273.15 THEN 6.112 * exp(17.62*(d.tmin-273.15)/(243.12+d.tmin-273.15)) ELSE 6.112 * exp(22.46*(d.tmin-273.15)/(272.62+d.tmin-273.15)) END) / (CASE WHEN t.temp_raw >= 273.15 THEN 6.112 * exp(17.62*(t.temp_raw-273.15)/(243.12+t.temp_raw-273.15)) ELSE 6.112 * exp(22.46*(t.temp_raw-273.15)/(272.62+t.temp_raw-273.15)) END), 0.0), 100.0) END, 6) AS hum_h
             FROM temp_core t
             JOIN daily_t d ON t.user_id = d.user_id AND t.date = d.date
         """,
@@ -3508,102 +3022,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
                          ELSE pot / potd * glob_d END, 6) AS glob_h
             FROM p3
         """,
-        "dedup_prefix": """
-            SELECT md5(array_to_string((string_split(text, ' '))[1:2], ' ')) AS digest,
-                   count(*) AS n_docs, min(doc_id) AS keep_id
-            FROM documents
-            GROUP BY 1 HAVING count(*) > 1
-        """,
-        "drop_incomplete_days": f"""
-            WITH daily AS ({_MET_DAILY_SQL}),
-            grid AS (
-              SELECT user_id,
-                     CAST(date AS TIMESTAMP) + to_hours(h.h) AS ts,
-                     precip / 24.0 AS p
-              FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
-            ),
-            b AS (SELECT user_id, min(ts) AS lo0, max(ts) AS hi0 FROM grid GROUP BY 1),
-            ragged AS (
-              SELECT g.user_id, g.ts, g.p
-              FROM grid g JOIN b ON g.user_id = b.user_id
-              WHERE g.ts >= b.lo0 + INTERVAL 5 HOUR AND g.ts <= b.hi0 - INTERVAL 3 HOUR
-            ),
-            bounds AS (
-              SELECT user_id,
-                     min(CASE WHEN hour(ts) = 0 AND minute(ts) = 0 THEN ts END) AS lo,
-                     max(CASE WHEN hour(ts) = 23 AND minute(ts) = 0 THEN ts END) AS hi
-              FROM ragged GROUP BY 1
-            )
-            SELECT r.user_id, r.ts, round(r.p, 6) AS precip_h
-            FROM ragged r JOIN bounds o ON r.user_id = o.user_id
-            WHERE r.ts BETWEEN o.lo AND o.hi
-        """,
-        "five_min_calendar": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id, CAST(date AS TIMESTAMP) + to_minutes(5 * h.h) AS ts
-            FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 287)) AS h) h
-        """,
-        "sub_level_calendar": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id,
-                   CAST(date AS TIMESTAMP) + to_microseconds(168750000 * h.h) AS ts
-            FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 511)) AS h) h
-        """,
-        "humidity_minmax": f"""
-            {_TEMP_SINE_CORE_SQL}
-            SELECT t.user_id, t.ts,
-                   round(CASE WHEN t.temp_raw IS NULL THEN NULL
-                         WHEN d.tmax = d.tmin THEN
-                            -- reference numpy on a flat day: ±inf clips
-                            -- to 100/0; 0·inf → NaN (here NULL)
-                            CASE WHEN t.temp_raw = d.tmin OR d.hum_min = d.hum_max THEN NULL
-                                 WHEN (t.temp_raw > d.tmin) = (d.hum_min > d.hum_max) THEN 100.0
-                                 ELSE 0.0 END
-                         ELSE least(greatest(
-                            d.hum_max + (t.temp_raw - d.tmin) / (d.tmax - d.tmin)
-                                      * (d.hum_min - d.hum_max),
-                            0.0), 100.0) END, 6) AS hum_h
-            FROM temp_core t JOIN daily_t d
-              ON t.user_id = d.user_id AND t.date = d.date
-        """,
-        "temp_shift": f"""
-            WITH met AS ({_MET_HOURLY_SQL}),
-            dm AS (
-              SELECT user_id, CAST(ts AS DATE) AS date, max(temp) AS mt
-              FROM met GROUP BY 1, 2
-            ),
-            am AS (
-              SELECT t.user_id, t.date, max(hour(m.ts)) AS max_hour
-              FROM dm t JOIN met m
-                ON m.user_id = t.user_id AND CAST(m.ts AS DATE) = t.date
-               AND m.temp = t.mt
-              GROUP BY 1, 2
-            ),
-            sn AS (
-              SELECT date,
-                     12.0 - ({LON} - {TZ}*15.0)*24.0/360.0
-                     - (12.0/pi()) * (0.000075
-                        + 0.001868*cos(2*pi()*(CAST(dayofyear(date) AS DOUBLE)-1)/365.0)
-                        - 0.032077*sin(2*pi()*(CAST(dayofyear(date) AS DOUBLE)-1)/365.0)
-                        - 0.014615*cos(4*pi()*(CAST(dayofyear(date) AS DOUBLE)-1)/365.0)
-                        - 0.040849*sin(4*pi()*(CAST(dayofyear(date) AS DOUBLE)-1)/365.0)) AS sunnoon
-              FROM (SELECT DISTINCT date FROM am)
-            )
-            SELECT a.user_id, CAST(month(a.date) AS BIGINT) AS month,
-                   round(avg(a.max_hour - s.sunnoon), 6) AS max_delta
-            FROM am a JOIN sn s ON a.date = s.date
-            GROUP BY 1, 2
-        """,
-        "top_customers": """
-            WITH rev AS (
-              SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS revenue
-              FROM orders JOIN customer ON o_custkey = c_custkey
-              GROUP BY 1, 2
-            )
-            SELECT c_custkey, c_name, revenue,
-                   CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey ASC) AS BIGINT) AS rank
-            FROM rev QUALIFY rank <= 10
-        """,
         "streaming_daily_agg": f"""
             WITH daily AS ({_MET_DAILY_SQL}),
             cutoff AS (SELECT max(ts) - INTERVAL 2 DAY AS wm FROM events)
@@ -3613,71 +3031,11 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             FROM daily, cutoff
             WHERE CAST(date AS TIMESTAMP) + INTERVAL 1 DAY <= cutoff.wm
         """,
-        "embedding_centroids": """
-            WITH flat AS (
-              SELECT label,
-                     CAST(unnest(generate_series(1, len(embedding))) - 1 AS BIGINT) AS pos,
-                     unnest(embedding) AS v
-              FROM embeddings
-            )
-            SELECT label, pos, round(avg(CAST(v AS DOUBLE)), 6) AS centroid
-            FROM flat GROUP BY 1, 2
-        """,
     }
 
     sqls = {
         **extended,
         "temp_sine_disagg": temp_sine_sql,
-        "daily_from_hourly": f"""
-            SELECT user_id, date,
-                   round(temp, 6) AS temp, round(tmin, 6) AS tmin,
-                   round(tmax, 6) AS tmax, round(precip, 3) AS precip,
-                   round(hum, 6) AS hum
-            FROM ({_MET_DAILY_SQL})
-        """,
-        "distribute_equally": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id,
-                   CAST(date AS TIMESTAMP) + to_hours(h.h) AS ts,
-                   round(precip / 24.0, 6) AS precip_h
-            FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS h) h
-        """,
-        "seasonal_subset": """
-            SELECT o_orderkey, o_orderdate, round(o_totalprice, 2) AS price
-            FROM orders WHERE month(o_orderdate) IN (3, 4, 5)
-        """,
-        "lead_lag": f"""
-            WITH daily AS ({_MET_DAILY_SQL})
-            SELECT user_id, date, round(tmin, 6) AS tmin,
-                   round(CASE WHEN lead(date) OVER w IS NULL THEN tmin
-                         WHEN date_diff('day', date, lead(date) OVER w) = 1 THEN lead(tmin) OVER w
-                         END, 6) AS tmin_next,
-                   round(CASE WHEN lag(date) OVER w IS NULL THEN tmin
-                         WHEN date_diff('day', lag(date) OVER w, date) = 1 THEN lag(tmin) OVER w
-                         END, 6) AS tmin_prev
-            FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY date)
-        """,
-        "cumsum": """
-            SELECT event_id, user_id,
-                   round(sum(value) OVER (PARTITION BY user_id ORDER BY ts
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 3) AS run_sum
-            FROM events
-        """,
-        "day_normalize": """
-            SELECT event_id,
-                   round(value / sum(value) OVER (PARTITION BY user_id, CAST(ts AS DATE)), 6) AS day_frac
-            FROM events
-        """,
-        "gap_count": """
-            SELECT user_id,
-                   CAST(sum(CASE WHEN prev_ts IS NOT NULL
-                            AND date_diff('microsecond', prev_ts, ts) <> 3600000000
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps
-            FROM (
-              SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-              FROM events
-            ) GROUP BY user_id
-        """,
         "gap_analysis": f"""
             WITH daily AS ({_MET_DAILY_SQL}),
             gaps AS (
@@ -3745,51 +3103,7 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             JOIN kept k ON g.user_id = k.user_id
             JOIN sstats s ON g.user_id = s.user_id
         """,
-        "complete_days": """
-            SELECT user_id, CAST(ts AS DATE) AS date,
-                   CAST(count(DISTINCT hour(ts)) AS BIGINT) AS nh
-            FROM events GROUP BY 1, 2 HAVING count(DISTINCT hour(ts)) >= 3
-        """,
-        "vapor_pressure": f"""
-            SELECT user_id, ts,
-                   round(CASE WHEN temp >= 273.15
-                         THEN 6.112 * exp(17.62*(temp-273.15)/(243.12+temp-273.15))
-                         ELSE 6.112 * exp(22.46*(temp-273.15)/(272.62+temp-273.15))
-                         END * hum / 100.0, 6) AS vp
-            FROM ({_MET_HOURLY_SQL})
-        """,
-        "dewpoint": f"""
-            WITH m AS ({_MET_HOURLY_SQL}),
-            v AS (
-              SELECT user_id, ts, temp,
-                     ln((CASE WHEN temp >= 273.15
-                         THEN 6.112 * exp(17.62*(temp-273.15)/(243.12+temp-273.15))
-                         ELSE 6.112 * exp(22.46*(temp-273.15)/(272.62+temp-273.15))
-                         END * hum / 100.0) / 6.112) AS lr
-              FROM m
-            )
-            SELECT user_id, ts,
-                   round(CASE WHEN temp >= 273.15
-                         THEN 243.12 * lr / (17.62 - lr)
-                         ELSE 272.62 * lr / (22.46 - lr) END + 273.15, 6) AS td
-            FROM v
-        """,
         "sun_times": sun_common,
-        "pot_radiation": pot_rad_sql,
-        "linregress": """
-            SELECT user_id,
-                   round(covar_samp(CAST(hour(ts) AS DOUBLE), value)
-                         / var_samp(CAST(hour(ts) AS DOUBLE)), 6) AS a1,
-                   round(avg(value) - covar_samp(CAST(hour(ts) AS DOUBLE), value)
-                         / var_samp(CAST(hour(ts) AS DOUBLE)) * avg(CAST(hour(ts) AS DOUBLE)), 6) AS a0
-            FROM events GROUP BY user_id
-        """,
-        "mean_course": f"""
-            SELECT user_id, CAST(month(ts) AS BIGINT) AS month,
-                   CAST(hour(ts) AS BIGINT) AS hour,
-                   round(avg(temp), 6) AS course
-            FROM ({_MET_HOURLY_SQL}) GROUP BY 1, 2, 3
-        """,
         "month_hour_wet_mean": f"""
             WITH m AS ({_MET_HOURLY_SQL}),
             w AS (
@@ -3812,71 +3126,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
             FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
             GROUP BY l_returnflag, l_linestatus
         """,
-        "revenue_by_nation": """
-            SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
-                   count(*) AS n_orders
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS digest, count(*) AS n_docs, min(doc_id) AS keep_id
-            FROM documents GROUP BY md5(text) HAVING count(*) > 1
-        """,
-        "fingerprint": """
-            SELECT doc_id,
-                   md5(array_to_string(list_sort(list_distinct(
-                       string_split_regex(trim(text), '\\s+'))), ' ')) AS fp
-            FROM documents
-        """,
-        "token_stats": """
-            WITH t AS (
-              SELECT doc_id, text,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-              FROM documents
-            ),
-            s AS (
-              SELECT d.doc_id,
-                     sum(CASE WHEN w IN ('the','and','of','to','in','is','that','with')
-                         THEN 1 ELSE 0 END) AS n_stop
-              FROM (SELECT doc_id,
-                           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-                    FROM documents) d
-              GROUP BY d.doc_id
-            )
-            SELECT t.doc_id, CAST(t.n_tokens AS BIGINT) AS n_tokens,
-                   round(CASE WHEN t.n_tokens > 0 THEN
-                         length(regexp_replace(t.text, '\\s+', '', 'g')) * 1.0 / t.n_tokens END, 6) AS mean_word_len,
-                   round(CASE WHEN t.n_tokens > 0 THEN s.n_stop * 1.0 / t.n_tokens END, 6) AS stopword_ratio,
-                   round((length(t.text) - length(regexp_replace(t.text, '[.,;:!?]', '', 'g'))) * 1.0
-                         / length(t.text), 6) AS punct_ratio
-            FROM t JOIN s ON t.doc_id = s.doc_id
-        """,
-        "lang_id": f"""
-            WITH w AS (
-              SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-              FROM documents
-            ),
-            sw AS (
-              SELECT doc_id,
-                     CAST(sum(CASE WHEN w = ANY({stop_en}) THEN 1 ELSE 0 END) AS BIGINT) AS score_en,
-                     CAST(sum(CASE WHEN w = ANY({stop_de}) THEN 1 ELSE 0 END) AS BIGINT) AS score_de,
-                     CAST(sum(CASE WHEN w = ANY({stop_es}) THEN 1 ELSE 0 END) AS BIGINT) AS score_es
-              FROM w GROUP BY doc_id
-            ),
-            sc AS (
-              SELECT doc_id, {_script_count_sql()}
-              FROM (SELECT doc_id, {_script_probe_sql()} AS probe FROM documents)
-            )
-            SELECT sw.doc_id, sw.score_en, sw.score_de, sw.score_es,
-                   sc.n_latin, sc.n_cyrillic, sc.n_cjk, sc.n_arabic,
-                   sc.n_kana, sc.n_hangul,
-                   {_script_pred_sql()} AS script_pred
-            FROM sw JOIN sc ON sw.doc_id = sc.doc_id
-        """,
-        "simhash": simhash_sql,
-        "minhash_bands": minhash_sql,
         "embedding_topk": f"""
             SELECT 'brute' AS method, t.* FROM ({topk_sql}) t
             UNION ALL
@@ -4059,17 +3308,9 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
     # late round 10: + the lsh branch (random-hyperplane bucket join,
     # 6 deterministic md5-derived planes replayed as literal
     # list_dot_product sign terms, exact cosine re-rank in-bucket)
-    bucket_terms6 = []
-    for p in range(6):
-        plane = _hyperplane(64, p)
-        arr = "[" + ",".join(repr(v) for v in plane) + "]"
-        bucket_terms6.append(
-            f"CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {arr}) > 0 "
-            f"THEN {1 << p} ELSE 0 END"
-        )
     b6 = f"""(
           SELECT vec_id, embedding,
-                 CAST({" + ".join(bucket_terms6)} AS BIGINT) AS bucket
+                 {lsh_bucket(6)} AS bucket
           FROM embeddings
         )"""
     lsh_topk_sql = f"""
@@ -4184,16 +3425,6 @@ LEFT JOIN covlen cv ON b.doc_id = cv.doc_id
 # ---------------------------------------------------------------------------
 
 
-def q_humidity_equal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-distribution humidity with [0,100] clip
-    (`humidity.py:61-62,120`)."""
-    from melodist_spark.operators.humidity import disaggregate_humidity
-
-    daily = _met_daily(spark, sf_dir)
-    out = disaggregate_humidity(daily, method="equal", keys=["user_id"])
-    return out.select("user_id", "ts", F.round("hum", 6).alias("hum_h"))
-
-
 def q_wind_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine wind disaggregation with fixed params (`wind.py:28-42`)."""
     from melodist_spark.operators.wind import disaggregate_wind
@@ -4211,41 +3442,6 @@ def q_wind_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "ts", F.round("wind", 6).alias("wind_h"))
 
 
-def q_calendar_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous daily calendar with zero-filled gaps — the Station
-    ingest reindex (`station.py:89-90`)."""
-    daily = _met_daily(spark, sf_dir).select("user_id", "date", "precip")
-    rng = daily.groupBy("user_id").agg(
-        F.min("date").alias("d0"), F.max("date").alias("d1")
-    )
-    cal = rng.select(
-        "user_id",
-        F.explode(F.sequence("d0", "d1")).alias("date"),
-    )
-    out = cal.join(daily, ["user_id", "date"], "left")
-    return out.select(
-        "user_id", "date", F.round(F.coalesce("precip", F.lit(0.0)), 3).alias("precip_f")
-    )
-
-
-def q_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward fill over event order (ffill primitive,
-    `util/util.py:60-62`)."""
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir)
-    v = F.when(F.col("value") > 50, F.col("value"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return e.select(
-        "event_id",
-        F.round(F.last(v, ignorenulls=True).over(w), 6).alias("v_ff"),
-    )
-
-
 def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional linear interpolation with forward padding
     (`station.py:403-437`, `temperature.py:239`)."""
@@ -4261,34 +3457,6 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         limit_direction="forward",
     )
     return out.select("user_id", "date", F.round("v", 6).alias("v_i"))
-
-
-def q_bristow_campbell(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bristow-Campbell daily radiation (`radiation.py:207-248`) with
-    fixed A/C and constant potential radiation."""
-    from melodist_spark.operators.radiation import bristow_campbell_exprs
-
-    daily = _met_daily(spark, sf_dir).withColumn("pot_rad_daily", F.lit(250.0))
-    bc = bristow_campbell_exprs(daily, "pot_rad_daily", 0.75, 2.4, ["user_id"])
-    v = F.when(F.isnan(F.col("bc_rad")), None).otherwise(F.col("bc_rad"))
-    return bc.select("user_id", "date", F.round(v, 6).alias("bc_rad"))
-
-
-def q_angstroem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Angstroem daily radiation from sunshine duration
-    (`radiation.py:283-311`) with computed day length."""
-    from melodist_spark.functions.solar import sun_times_exprs
-    from melodist_spark.operators.radiation import angstroem_expr
-
-    daily = _met_daily(spark, sf_dir).withColumn(
-        "ssd", F.col("hum") - F.floor(F.col("hum") / 10.0) * 10.0
-    )
-    st = sun_times_exprs("date", LON, LAT, TZ)
-    daily = daily.withColumn("daylength", st["daylength"])
-    glob_day = angstroem_expr(
-        F.col("ssd"), F.col("daylength"), F.lit(300.0), 0.25, 0.5
-    )
-    return daily.select("user_id", "date", F.round(glob_day, 6).alias("glob_day"))
 
 
 def q_validation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4401,19 +3569,6 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def q_embedding_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH bucket signatures (ANN scale path);
-    Arrow-batched matmul UDF rather than a 12×64-literal expression
-    tree (codegen cost dominated the data work)."""
-    from melodist_spark.pipeline.similarity import lsh_bucket_udf
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return emb.select(
-        "vec_id",
-        lsh_bucket_udf(64, num_planes=12)(F.col("embedding")).alias("bucket"),
-    )
-
-
 def q_cascade_disagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cascade precipitation disaggregation, BOTH sub-daily paths
     (`precipitation.py:74-372`): hourly (avg stats, 45 min→1 h regrid)
@@ -4510,61 +3665,27 @@ _TEMP_SINE_CORE_SQL = f"""
 """
 
 
-def q_drop_incomplete_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head/tail trim to full days (`util/util.py:300-352`): an hourly
-    grid with ragged edges (first 5 h and last 3 h removed) trims back
-    to midnight-aligned days."""
-    from melodist_spark.util.calendar import distribute_equally
-    from melodist_spark.util.gaps import drop_incomplete_days
-    from pyspark.sql import Window
-
-    daily = _met_daily(spark, sf_dir).select("user_id", "date", "precip")
-    grid = distribute_equally(daily, "precip", divide=True)
-    w = Window.partitionBy("user_id")
-    ragged = grid.withColumn("__lo", F.min("ts").over(w)).withColumn(
-        "__hi", F.max("ts").over(w)
-    ).filter(
-        (F.col("ts") >= F.col("__lo") + F.expr("INTERVAL 5 HOURS"))
-        & (F.col("ts") <= F.col("__hi") - F.expr("INTERVAL 3 HOURS"))
-    ).drop("__lo", "__hi")
-    out = drop_incomplete_days(ragged, keys=["user_id"])
-    return out.select("user_id", "ts", F.round("precip", 6).alias("precip_h"))
-
-
-def q_five_min_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """288-step 5-minute grid per day (`precipitation.py:740-767`)."""
-    from melodist_spark.util.calendar import five_min_calendar
-
-    daily = _met_daily(spark, sf_dir).select("user_id", "date")
-    out = five_min_calendar(daily)
-    return out.select("user_id", "ts")
-
-
-def q_sub_level_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dyadic cascade grid at level 9: 512 boxes of 168.75 s
-    (`precipitation.py:705-737`)."""
-    from melodist_spark.util.calendar import sub_level_calendar
-
-    daily = _met_daily(spark, sf_dir).select("user_id", "date")
-    out = sub_level_calendar(daily, level=9)
-    return out.select("user_id", "ts")
-
-
 def _humidity_variant_exprs() -> dict:
     """The by-name column trees of q_humidity_variants (daily dewpoint
     regression columns, the fused fix-timing sine temperature, the
     three raw hum_disagg ratios, and the exploded variant-struct
-    column) — context-free, memoized per application via
-    _ENTRY_EXPR_MEMO (round 14; ~3.1k py4j round-trips per build
-    otherwise). Formulas copied term-for-term from
-    disaggregate_humidity / disaggregate_temperature and pinned
-    branch-identical by test_q_humidity_variants_matches_public_ops."""
+    column) — context-free, memoized per application (round 14; ~3.1k
+    py4j round-trips per build otherwise). The formulas are the
+    public ops' own helpers; test_q_humidity_variants_matches_public_ops
+    pins each branch."""
     from pyspark.sql import Window
 
-    from melodist_spark.functions.meteo import vapor_pressure
-    from melodist_spark.operators.temperature import HOURS_PER_DAY
+    from melodist_spark.operators.humidity import (
+        _clip_rh,
+        _lindew_tdew,
+        _min_max_rh,
+        _rh_from_dewpoint,
+    )
+    from melodist_spark.operators.temperature import (
+        _sine_expr,
+        _smoothed_minmax,
+    )
 
-    PI = 3.141592653589793
     wd = Window.partitionBy("user_id").orderBy("date")
     daily_exprs = {
         "tdew_reg": F.col("a0") + F.col("a1") * F.col("tmin"),
@@ -4573,45 +3694,9 @@ def _humidity_variant_exprs() -> dict:
             F.col("a0") + F.col("a1") * F.col("tmin"),
         ),
     }
-
-    h = F.col("hour").cast("double")
     # the fused fix-timing sine_min_max temperature
-    # (`temperature.py:127-143`)
-    minv = F.when(
-        F.col("hour") < F.col("max_loc"), F.col("min_val_cur")
-    ).otherwise(F.col("min_val_next"))
-    maxv = F.when(
-        F.col("hour") < F.col("min_loc"), F.col("max_val_before")
-    ).otherwise(F.col("max_val_cur"))
-    delta = maxv - minv
-    temp = (
-        minv
-        + delta / 2.0
-        + delta
-        / 2.0
-        * F.cos(F.lit(2 * PI / HOURS_PER_DAY) * (h - F.col("max_loc")))
-    )
-
-    # linear_dewpoint_variation hourly dewpoint: eq. (20)/(21) of
-    # Debele et al. 2007 (`humidity.py:73-86`)
-    tdew_delta = 0.5 * F.sin(
-        (h + 1) * F.lit(PI) / F.col("kr") - F.lit(3.0 * PI / 4.0)
-    )
-    tdew_h = (
-        F.col("tdew_reg")
-        + h / 24.0 * (F.col("tdew_next") - F.col("tdew_reg"))
-        + tdew_delta
-    )
-    # min_max: position of temp within the daily range
-    # (`humidity.py:91-101`), flat-day semantics as the public op
-    num = F.col("__temp") - F.col("tmin")
-    den = F.col("tmax") - F.col("tmin")
-    diff = F.col("hum_min") - F.col("hum_max")
-    flat = F.when(
-        (num == 0) | (diff == 0), F.lit(None).cast("double")
-    ).otherwise(
-        F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
-    )
+    temp = _sine_expr(*_smoothed_minmax("min_loc", "max_loc"), "max_loc")
+    tdew_h = _lindew_tdew(F.col("hour").cast("double"), "tdew_reg", "tdew_next")
     # MATERIALIZE each raw hum_disagg as a column before the clip —
     # clip/round reference `val` several times, and handing them the
     # raw trees inlines the vapor-pressure exponentials ~6× into the
@@ -4619,38 +3704,23 @@ def _humidity_variant_exprs() -> dict:
     # the public op materializes hum_disagg the same way
     hd_exprs = {
         # minimal: tdew = daily tmin (`humidity.py:63-66`)
-        "__hd_min": 100.0
-        * vapor_pressure(F.col("tmin"), 100.0)
-        / vapor_pressure(F.col("__temp"), 100.0),
-        "__hd_mm": F.when(
-            den != 0, F.col("hum_max") + num / den * diff
-        ).otherwise(flat),
-        "__hd_ld": 100.0
-        * vapor_pressure(tdew_h, 100.0)
-        / vapor_pressure(F.col("__temp"), 100.0),
+        "__hd_min": _rh_from_dewpoint("tmin", "__temp"),
+        "__hd_mm": _min_max_rh("__temp"),
+        "__hd_ld": _rh_from_dewpoint(tdew_h, "__temp"),
     }
-
-    def clip(name):
-        # null-preserving clip to [0, 100] (`humidity.py:120`)
-        val = F.col(name)
-        return F.when(val.isNull(), val).otherwise(
-            F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0))
-        )
-
     out = F.explode(
         F.array(
-            F.struct(
-                F.lit("minimal").alias("variant"),
-                F.round(clip("__hd_min"), 6).alias("hum_h"),
-            ),
-            F.struct(
-                F.lit("min_max").alias("variant"),
-                F.round(clip("__hd_mm"), 6).alias("hum_h"),
-            ),
-            F.struct(
-                F.lit("lindew").alias("variant"),
-                F.round(clip("__hd_ld"), 6).alias("hum_h"),
-            ),
+            *(
+                F.struct(
+                    F.lit(variant).alias("variant"),
+                    F.round(_clip_rh(col), 6).alias("hum_h"),
+                )
+                for variant, col in (
+                    ("minimal", "__hd_min"),
+                    ("min_max", "__hd_mm"),
+                    ("lindew", "__hd_ld"),
+                )
+            )
         )
     )
     return {"daily": daily_exprs, "temp": temp, "hd": hd_exprs, "out": out}
@@ -4672,8 +3742,7 @@ def q_humidity_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes the chain once — one neighbour window (the lindew
     # tdew_next lead rides the same window spec), one explode — and
     # emits the three variant rows per hour with one
-    # explode-of-structs. Formulas are copied term-for-term from
-    # disaggregate_humidity / disaggregate_temperature;
+    # explode-of-structs. Formulas are the public ops' own helpers;
     # test_q_humidity_variants_matches_public_ops pins each branch
     # row-identical to the public op at the row's round-6 grain; the
     # DuckDB twin is unchanged.
@@ -4684,9 +3753,7 @@ def q_humidity_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from melodist_spark.util.calendar import hourly_calendar
 
-    exprs = _ENTRY_EXPR_MEMO.get(
-        ("humidity_variants",), _humidity_variant_exprs
-    )
+    exprs = MEMO.get(("humidity_variants",), _humidity_variant_exprs)
 
     m = _met_hourly(spark, sf_dir)
     params = dewpoint_regression(m, keys=["user_id"]).withColumn(
@@ -4779,47 +3846,6 @@ def q_mean_course_temp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "ts", F.round("temp", 6).alias("temp_mc"))
 
 
-def q_temp_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly warmest-hour shift vs solar noon
-    (`temperature.py:267-287`); the day's max-temp hour is resolved
-    with a deterministic max-hour tie-break."""
-    from melodist_spark.functions.solar import sun_times_exprs
-    from pyspark.sql import Window
-
-    m = _met_hourly(spark, sf_dir)
-    daily_max = m.groupBy("user_id", F.to_date("ts").alias("date")).agg(
-        F.max("temp").alias("tmax_h")
-    )
-    at_max = (
-        m.withColumn("date", F.to_date("ts"))
-        .join(daily_max, ["user_id", "date"])
-        .filter(F.col("temp") == F.col("tmax_h"))
-        .groupBy("user_id", "date")
-        .agg(F.max(F.hour("ts")).alias("max_hour"))
-    )
-    st = sun_times_exprs("date", LON, LAT, TZ)
-    out = at_max.withColumn("sunnoon", st["sunnoon"]).withColumn(
-        "delta", F.col("max_hour") - F.col("sunnoon")
-    )
-    return out.groupBy("user_id", F.month("date").cast("long").alias("month")).agg(
-        F.round(F.avg("delta"), 6).alias("max_delta")
-    )
-
-
-def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid of embedding vectors (IVF coarse-quantizer
-    training step) — long-form (label, pos, mean)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", F.col("pos").cast("long").alias("pos"))
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("centroid"))
-    )
-
-
-_STREAM_SRC_CACHE: dict = {}
-
-
 def q_streaming_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming daily aggregation (availableNow +
     2-day watermark, append mode): deterministic — only windows whose
@@ -4827,23 +3853,26 @@ def q_streaming_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicates the watermark cutoff in SQL.
 
     Bench convention (round 6): the parquet streaming SOURCE is
-    written once per process per sf_dir and reused — it's harness
+    written once per application per sf_dir and reused — it's harness
     setup (a stream's source exists before the stream in any real
     deployment), so bench.py's min-of-2-runs prices the stream
     start + watermark aggregation, not a per-run source write.
     Correctness is unaffected: the written frame is a pure function
-    of sf_dir."""
+    of sf_dir.
+
+    A stream that does not finish within 300 s is stopped and raises
+    ``TimeoutError``; a failed batch raises its exception. Neither
+    returns the partial memory table."""
     import tempfile
     import uuid
 
     from melodist_spark.streaming.daily_agg import streaming_daily_from_hourly
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        m = _met_hourly(spark, sf_dir)
-        src = tempfile.mkdtemp(prefix="stream_src_")
-        m.write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = MEMO.get(
+        ("stream_src", sf_dir), lambda: tempfile.mkdtemp(prefix="stream_src_")
+    )
+    if not os.path.exists(os.path.join(src, "_SUCCESS")):
+        _met_hourly(spark, sf_dir).write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     agg = streaming_daily_from_hourly(stream, watermark="2 days", keys=["user_id"])
@@ -4855,7 +3884,20 @@ def q_streaming_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        if not q.awaitTermination(300):
+            raise TimeoutError(
+                f"streaming_daily_agg: stream {name} did not finish within 300 s"
+            )
+        exc = q.exception()
+        if exc is not None:
+            raise exc
+    except BaseException:
+        # a timed-out or failed stream is stopped and its partial
+        # memory table dropped: nothing partial is returned
+        q.stop()
+        spark.catalog.dropTempView(name)
+        raise
     out = spark.table(name)
     return out.select(
         "user_id",
@@ -4863,19 +3905,6 @@ def q_streaming_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("temp", 6).alias("temp"),
         F.round("precip", 3).alias("precip"),
         F.round("hum", 6).alias("hum"),
-    )
-
-
-def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-dedup machinery on a 2-word-prefix digest — unlike the
-    full-text digest this produces real duplicate groups on the
-    synthetic corpus, exercising group/keep-min/count semantics."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    digest = F.md5(F.concat_ws(" ", F.slice(F.split(F.col("text"), " "), 1, 2)))
-    return (
-        docs.groupBy(digest.alias("digest"))
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -5468,86 +4497,38 @@ def _temp_sine_variant_exprs() -> "F.Column":
     """The exploded method-struct column of q_temp_sine_variants —
     every reference is BY NAME over the shared hourly frame
     (hour/__minl_*/__maxl_*/neighbour extremes), so the tree is
-    context-free and memoized per application via _ENTRY_EXPR_MEMO
-    (round 14; it cost ~1.6k py4j round-trips per build). Formulas
-    are copied term-for-term from disaggregate_temperature and pinned
-    branch-identical to the public op by
-    test_q_temp_sine_variants_matches_public_ops."""
-    from melodist_spark.operators.temperature import HOURS_PER_DAY
+    context-free and memoized per application (round 14; it cost
+    ~1.6k py4j round-trips per build). The formulas are the public
+    op's own helpers, fed this row's per-policy location columns."""
+    from melodist_spark.operators.temperature import (
+        _sine_expr,
+        _sine_mean_expr,
+        _sine_night_expr,
+        _smoothed_minmax,
+    )
 
-    h = F.col("hour").cast("double")
-    pi = F.lit(3.141592653589793)
-    two_pi_24 = F.lit(2 * 3.141592653589793 / HOURS_PER_DAY)
+    def sine(min_loc, max_loc):
+        return _sine_expr(*_smoothed_minmax(min_loc, max_loc), max_loc)
 
-    def minmax_vals(min_loc, max_loc):
-        # smooth transitions (`temperature.py:127-137`)
-        min_val = F.when(
-            F.col("hour") < max_loc, F.col("min_val_cur")
-        ).otherwise(F.col("min_val_next"))
-        max_val = F.when(
-            F.col("hour") < min_loc, F.col("max_val_before")
-        ).otherwise(F.col("max_val_cur"))
-        return min_val, max_val
-
-    def sine_min_max(min_loc, max_loc):
-        minv, maxv = minmax_vals(min_loc, max_loc)
-        delta = maxv - minv
-        v_trans = minv + delta / 2.0
-        return v_trans + delta / 2.0 * F.cos(two_pi_24 * (h - max_loc))
-
-    def sine_night(min_loc, max_loc):
-        # three-piece cosine (`temperature.py:145-167`)
-        minv, maxv = minmax_vals(min_loc, max_loc)
-        delta = maxv - minv
-        v_trans = minv + delta / 2.0
-        span = max_loc - min_loc
-        before_min = h <= min_loc
-        between = (h > min_loc) & (h < max_loc)
-        t_before = v_trans + delta / 2.0 * F.cos(
-            F.try_divide(pi, HOURS_PER_DAY - span)
-            * (HOURS_PER_DAY - max_loc + h)
-        )
-        t_between = v_trans + delta / 2.0 * F.cos(
-            1.25 * pi + F.try_divide(0.75 * pi, span) * (h - min_loc)
-        )
-        t_after = v_trans + delta / 2.0 * F.cos(
-            F.try_divide(pi, HOURS_PER_DAY - span) * (h - max_loc)
-        )
-        return (
-            F.when(before_min, t_before)
-            .when(between, t_between)
-            .otherwise(t_after)
-        )
-
-    def sine_mean(max_loc):
-        # sine_mean (`temperature.py:172-176`)
-        dtr = F.col("max_val_cur") - F.col("min_val_cur")
-        return F.col("mean_val_cur") + dtr / 2.0 * F.cos(
-            two_pi_24 * (h - max_loc)
-        )
-
-    t_mean = sine_mean(F.col("__maxl_fix"))
-    t_night = sine_night(F.col("__minl_fix"), F.col("__maxl_fix"))
-    t_sunloc = sine_min_max(F.col("__minl_sl"), F.col("__maxl_sl"))
-    t_sunshift = sine_min_max(F.col("__minl_ss"), F.col("__maxl_ss"))
+    temps = {
+        "mean": _sine_mean_expr("__maxl_fix"),
+        "night": _sine_night_expr(
+            *_smoothed_minmax("__minl_fix", "__maxl_fix"),
+            "__minl_fix",
+            "__maxl_fix",
+        ),
+        "sunloc": sine("__minl_sl", "__maxl_sl"),
+        "sunshift": sine("__minl_ss", "__maxl_ss"),
+    }
     return F.explode(
         F.array(
-            F.struct(
-                F.lit("mean").alias("method"),
-                F.round(t_mean, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("night").alias("method"),
-                F.round(t_night, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("sunloc").alias("method"),
-                F.round(t_sunloc, 6).alias("temp_h"),
-            ),
-            F.struct(
-                F.lit("sunshift").alias("method"),
-                F.round(t_sunshift, 6).alias("temp_h"),
-            ),
+            *(
+                F.struct(
+                    F.lit(method).alias("method"),
+                    F.round(t, 6).alias("temp_h"),
+                )
+                for method, t in temps.items()
+            )
         )
     )
 
@@ -5572,16 +4553,14 @@ def q_temp_sine_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calendar, so the row computes the daily frame once (one window,
     # one sun tree, the sunshift max_delta broadcast-joined in) and
     # emits the four method rows per hour with one explode-of-structs.
-    # Formulas are copied term-for-term from disaggregate_temperature
-    # (fix/sun_loc/sun_loc_shift loc pairs via the operator's own
-    # _loc_exprs); test_q_temp_sine_variants_matches_public_ops pins
-    # each branch row-identical to the public op at the row's round-6
-    # grain; the DuckDB twin is unchanged.
+    # Formulas and fix/sun_loc/sun_loc_shift loc pairs are the
+    # operator's own helpers; test_q_temp_sine_variants_matches_public_ops
+    # pins each branch row-identical to the public op at the row's
+    # round-6 grain; the DuckDB twin is unchanged.
     from pyspark.sql import Window
 
     from melodist_spark.functions.solar import sun_times_exprs
     from melodist_spark.operators.temperature import (
-        HOURS_PER_DAY,
         _loc_exprs,
         _neighbor_exprs,
     )
@@ -5640,9 +4619,7 @@ def q_temp_sine_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hour", F.hour("ts")
     )
 
-    mt = _ENTRY_EXPR_MEMO.get(
-        ("temp_sine_variants_mt",), _temp_sine_variant_exprs
-    )
+    mt = MEMO.get(("temp_sine_variants_mt",), _temp_sine_variant_exprs)
     return (
         hourly.select("user_id", "ts", mt.alias("__mt"))
         .select(
@@ -7072,16 +6049,17 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluated once for both parameterizations, two same-key day
     # windows (pot_rad + course, one exchange/sort) — and emits the
     # four method rows per hour with a single explode-of-structs.
-    # Branch expressions are copied term-for-term from
-    # `disaggregate_radiation`, and
+    # Branch formulas are `disaggregate_radiation`'s own helpers, and
     # test_q_radiation_proxy_variants_matches_public_ops pins each
     # exploded branch row-identical (at the row's own round-6 grain)
     # to the public op; the DuckDB twin is unchanged.
     from pyspark.sql import Window
 
     from melodist_spark.operators.radiation import (
+        _angstroem_glob_daily,
         _bc_daily_terms,
         _bc_trans_expr,
+        _floor_glob,
         _with_station_meta,
     )
     from melodist_spark.functions.solar import (
@@ -7144,25 +6122,12 @@ def q_radiation_proxy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     prd = F.col("pot_rad_daily")
-    crd = F.col("__course_daily")
-
-    def _floor(g):
-        return F.when(g < 1e-2, 0.0).otherwise(g)
-
     ratio = F.try_divide(F.col("pot_rad"), prd)
-    gd_ssd = F.when(
-        F.col("daylength") > 0,
-        (
-            F.lit(0.25)
-            + F.lit(0.5) * F.try_divide(F.col("ssd"), F.col("daylength"))
-        )
-        * prd,
-    ).otherwise(F.lit(0.0))
-    g_ssd = _floor(ratio * gd_ssd)
-    g_bc = _floor(ratio * (F.col("__tr_bc") * prd))
-    g_bcf = _floor(ratio * (F.col("__tr_bcf") * prd))
-    g_course = _floor(
-        F.try_divide(F.col("__course"), crd) * F.col("glob")
+    g_ssd = _floor_glob(ratio * _angstroem_glob_daily(0.25, 0.5))
+    g_bc = _floor_glob(ratio * (F.col("__tr_bc") * prd))
+    g_bcf = _floor_glob(ratio * (F.col("__tr_bcf") * prd))
+    g_course = _floor_glob(
+        F.try_divide(F.col("__course"), F.col("__course_daily")) * F.col("glob")
     )
 
     return (

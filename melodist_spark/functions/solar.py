@@ -53,10 +53,7 @@ def _equation_of_time(doy: Column) -> Column:
     )
 
 
-from melodist_spark.util.planmemo import PlanMemo, memo_part
-
-_SUN_TIMES_MEMO = PlanMemo(cap=256)
-_POTRAD_MEMO = PlanMemo(cap=256)
+from melodist_spark.util.planmemo import MEMO, memo_part
 
 
 def sun_times_exprs(date_col, lon, lat, timezone) -> dict[str, Column]:
@@ -79,7 +76,7 @@ def sun_times_exprs(date_col, lon, lat, timezone) -> dict[str, Column]:
     if isinstance(date_col, str):
         parts = (memo_part(lon), memo_part(lat), memo_part(timezone))
         if all(p is not None for p in parts):
-            return _SUN_TIMES_MEMO.get(
+            return MEMO.get(
                 ("sun", date_col, *parts),
                 lambda: _sun_times_exprs_build(date_col, lon, lat, timezone),
             )
@@ -158,7 +155,7 @@ def potential_radiation(
     """
     parts = tuple(memo_part(v) for v in (ts, lon, lat, timezone))
     if all(p is not None for p in parts):
-        return _POTRAD_MEMO.get(
+        return MEMO.get(
             (
                 "potrad",
                 *parts,

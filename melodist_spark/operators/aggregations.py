@@ -12,22 +12,13 @@ from pyspark.sql import functions as F
 KEYS = ["station_id"]
 
 
-def daily_from_hourly(
-    df: DataFrame,
-    keys: list[str] = ("station_id",),
-    ts_col: str = "ts",
-    date_col: str = "date",
-) -> DataFrame:
-    """Aggregate hourly→daily with per-variable semantics.
-
-    Reference `util/util.py:374-414`: temp→mean/min/max, precip→sum,
-    glob→mean, hum→mean/min/max, wind→mean, ssd→sum/60. Only columns
-    present in ``df`` are produced. Single hash agg over
-    (keys, to_date(ts)).
-    """
-    keys = list(keys)
+def daily_aggs(cols) -> list:
+    """The per-variable daily aggregation rules of `util/util.py:374-414`
+    for the met columns present in ``cols``: temp→mean/min/max,
+    precip→sum, glob→mean, hum→mean/min/max, wind→mean, ssd→sum/60.
+    Shared by the batch and the streaming daily aggregation."""
+    cols = set(cols)
     aggs = []
-    cols = set(df.columns)
     if "temp" in cols:
         aggs += [
             F.avg("temp").alias("temp"),
@@ -48,6 +39,20 @@ def daily_from_hourly(
         aggs.append(F.avg("wind").alias("wind"))
     if "ssd" in cols:
         aggs.append((F.sum("ssd") / F.lit(60.0)).alias("ssd"))
+    return aggs
+
+
+def daily_from_hourly(
+    df: DataFrame,
+    keys: list[str] = ("station_id",),
+    ts_col: str = "ts",
+    date_col: str = "date",
+) -> DataFrame:
+    """Aggregate hourly→daily with the :func:`daily_aggs` rules. Only
+    columns present in ``df`` are produced. Single hash agg over
+    (keys, to_date(ts)).
+    """
+    aggs = daily_aggs(df.columns)
     if not aggs:
         raise ValueError("no known met columns in dataframe")
     return (

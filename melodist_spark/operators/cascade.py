@@ -24,15 +24,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util.calendar import LEVEL11_STEP_US
 from ..util.execution import pin_partitions
 
 #: class boundaries of the weight histogram (`precipitation.py:143`)
 WCLASSBOUNDS = np.array([0.0, 0.1429, 0.2857, 0.4286, 0.5714, 0.7143, 0.8571, 1.0])
 WLOWER = WCLASSBOUNDS[:7]
 WUPPER = WCLASSBOUNDS[1:]
-
-#: µs per box at cascade level 11 (`precipitation.py:706`)
-LEVEL11_STEP_US = 42_187_500
 
 
 class BoxTypes:
@@ -122,16 +120,24 @@ class CascadeStatistics:
         )
 
     @classmethod
-    def from_dict(cls, d: dict) -> "CascadeStatistics":
+    def from_dict(cls, d) -> "CascadeStatistics":
+        """Rebuild from :meth:`to_dict` output or a ``build_casc`` stats
+        row (anything indexable by field name); the arrays may be
+        nested or flat."""
+
+        def arr(key: str, shape: tuple) -> np.ndarray:
+            a = np.array(d[key])
+            if a.ndim > 1 and a.shape != shape:
+                raise ValueError(f"{key} has shape {a.shape}, expected {shape}")
+            return a.reshape(shape)
+
         casc = cls()
-        casc.p01 = np.array(d["p01"])
-        casc.p10 = np.array(d["p10"])
-        casc.pxx = np.array(d["pxx"])
-        casc.wxx = np.array(d["wxx"])
+        casc.p01 = arr("p01", (2, 4))
+        casc.p10 = arr("p10", (2, 4))
+        casc.pxx = arr("pxx", (2, 4))
+        casc.wxx = arr("wxx", (7, 2, 4))
         casc.threshold = np.array(d["threshold"])
         casc.percentile = d["percentile"]
-        assert casc.p01.shape == (2, 4)
-        assert casc.wxx.shape == (7, 2, 4)
         return casc
 
     def __eq__(self, other):
@@ -293,22 +299,6 @@ def _stats_schema(df: DataFrame, keys: list[str]) -> str:
     )
 
 
-def _default_buckets(df: DataFrame) -> int:
-    """Default: 0 = direct ``groupBy(keys)`` grouped-map.
-
-    Measured crossover (local[32]): with long per-station series
-    (≥ ~1000 rows/station — the cluster-scale regime) direct grouping
-    is 4–8× faster than hash-bucketing, because the input's existing
-    station partitioning is reused (no extra exchange) and Spark's
-    grouped-map handles many small groups efficiently. Bucketing
-    (``station_buckets > 0``) wins only on tiny-group corpora (tens of
-    rows per station, e.g. short test extracts), where it amortizes
-    the per-group Python-worker round-trip across stations — callers
-    in that regime should pass an explicit bucket count of roughly
-    ``n_stations / 20``."""
-    return 0
-
-
 def build_casc(
     hourly_df: DataFrame,
     months: list[list[int]] | None = None,
@@ -319,17 +309,19 @@ def build_casc(
     keys: list[str] = ("station_id",),
     ts_col: str = "ts",
     precip_col: str = "precip",
-    station_buckets: int | None = None,
+    station_buckets: int = 0,
 ) -> DataFrame:
     """Distributed cascade calibration.
 
-    Default is a direct ``groupBy(keys)`` grouped-map — reuses any
-    existing station partitioning and is the fast path for
-    cluster-scale series (see :func:`_default_buckets`). With
+    Default (``station_buckets=0``) is a direct ``groupBy(keys)``
+    grouped-map — reuses any existing station partitioning and is the
+    fast path for cluster-scale series: measured on local[32] with
+    ≥ ~1000 rows/station it is 4–8× faster than hash-bucketing. With
     ``station_buckets > 0`` stations are instead hash-bucketed into
     that many tasks (kernel loops stations inside — amortizes
-    Arrow/pandas fixed costs on tiny-group corpora; results are
-    per-station and bucket-invariant). Seasons are
+    Arrow/pandas fixed costs on tiny-group corpora of tens of rows per
+    station, where roughly ``n_stations / 20`` buckets pay off;
+    results are per-station and bucket-invariant). Seasons are
     month subsets as in `precipitation.py:631-702`. Output rows carry
     the flattened statistics arrays; ``level = -1`` marks the averaged
     statistics (``avg_stats=True``), otherwise one row per level.
@@ -338,8 +330,6 @@ def build_casc(
     remains for the small-fleet broadcast-dict path.
     """
     keys = list(keys)
-    if station_buckets is None:
-        station_buckets = _default_buckets(hourly_df)
     if months is None:
         months = [list(range(1, 13))]
     schema = _stats_schema(hourly_df, keys)
@@ -430,13 +420,7 @@ def collect_cascade_stats(stats_df: DataFrame, key_col: str = "station_id") -> d
     out: dict = {}
     per_level: dict = {}
     for r in rows:
-        s = CascadeStatistics()
-        s.p01 = np.array(r["p01"]).reshape(2, 4)
-        s.p10 = np.array(r["p10"]).reshape(2, 4)
-        s.pxx = np.array(r["pxx"]).reshape(2, 4)
-        s.wxx = np.array(r["wxx"]).reshape(7, 2, 4)
-        s.threshold = np.array(r["threshold"])
-        s.percentile = r["percentile"]
+        s = CascadeStatistics.from_dict(r)
         key = (r[key_col], r["season"])
         if r["level"] == -1:
             out[key] = s
@@ -548,21 +532,10 @@ def _station_seed(station_id, seed: int) -> int:
 def _stats_from_rows(rows) -> "CascadeStatistics | list[CascadeStatistics]":
     """Rebuild CascadeStatistics from build_casc stats rows (dict-like
     structs carried per group through the stats join)."""
-
-    def mk(r):
-        s = CascadeStatistics()
-        s.p01 = np.array(r["p01"]).reshape(2, 4)
-        s.p10 = np.array(r["p10"]).reshape(2, 4)
-        s.pxx = np.array(r["pxx"]).reshape(2, 4)
-        s.wxx = np.array(r["wxx"]).reshape(7, 2, 4)
-        s.threshold = np.array(r["threshold"])
-        s.percentile = r["percentile"]
-        return s
-
     rows = sorted(rows, key=lambda r: r["level"])
     if len(rows) == 1 and rows[0]["level"] == -1:
-        return mk(rows[0])
-    return [mk(r) for r in rows]
+        return CascadeStatistics.from_dict(rows[0])
+    return [CascadeStatistics.from_dict(r) for r in rows]
 
 
 def disagg_prec_cascade(
@@ -576,7 +549,7 @@ def disagg_prec_cascade(
     date_col: str = "date",
     ts_col: str = "ts",
     season: int = 0,
-    station_buckets: int | None = None,
+    station_buckets: int = 0,
     emit: str = "steps",
 ) -> DataFrame:
     """Distributed cascade disaggregation.
@@ -598,7 +571,7 @@ def disagg_prec_cascade(
     result by N steps (`precipitation.py:317-319`).
 
     Default is a direct ``groupBy(keys)`` grouped-map (the
-    cluster-scale fast path, see :func:`_default_buckets`). With
+    cluster-scale fast path, see :func:`build_casc`). With
     ``station_buckets > 0`` stations are hash-bucketed and looped
     inside the kernel: per-group Arrow + pandas fixed costs dominate
     when station series are short (a 2× win measured at 1500 stations
@@ -623,8 +596,6 @@ def disagg_prec_cascade(
         raise ValueError("emit='daily' requires shift=0")
     keys = list(keys)
     spark = daily.sparkSession
-    if station_buckets is None:
-        station_buckets = _default_buckets(daily)
     stats_df = cascade_options if isinstance(cascade_options, DataFrame) else None
     bc = (
         None

@@ -8,7 +8,7 @@ joins with tiny parameter tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.meteo import (
@@ -125,15 +125,9 @@ def disaggregate_humidity(
         assert fused or hourly_temp is not None, "hourly temperature required"
         if method == "linear_dewpoint_variation":
             # eq. (20)/(21) of Debele et al. (2007) (`humidity.py:73-86`)
-            hour = F.hour(ts_col).cast("double")
-            tdew_delta = 0.5 * F.sin(
-                (hour + 1) * F.lit(PI) / F.col("kr") - F.lit(3.0 * PI / 4.0)
-            )
             base = base.withColumn(
                 "tdew",
-                F.col("tdew")
-                + hour / 24.0 * (F.col("tdew_next") - F.col("tdew"))
-                + tdew_delta,
+                _lindew_tdew(F.hour(ts_col).cast("double"), "tdew", "tdew_next"),
             )
 
         if fused:
@@ -142,12 +136,7 @@ def disaggregate_humidity(
             joined = base.join(
                 hourly_temp.select(*keys, ts_col, "temp"), [*keys, ts_col]
             )
-        out = joined.withColumn(
-            "hum_disagg",
-            100.0
-            * vapor_pressure(F.col("tdew"), 100.0)
-            / vapor_pressure(F.col("temp"), 100.0),
-        )
+        out = joined.withColumn("hum_disagg", _rh_from_dewpoint("tdew", "temp"))
 
     elif method == "min_max":
         assert "hum_min" in daily.columns and "hum_max" in daily.columns, (
@@ -160,22 +149,7 @@ def disaggregate_humidity(
             joined = base.join(
                 hourly_temp.select(*keys, ts_col, "temp"), [*keys, ts_col]
             )
-        # flat day (tmax == tmin): the reference's numpy ratio is ±inf
-        # (→ 100/0 after the clip, sign of (temp-tmin)·(hum_min-hum_max))
-        # and NaN only for temp == tmin or hum_min == hum_max (0·inf);
-        # we reproduce that, with NaN expressed as null
-        num = F.col("temp") - F.col("tmin")
-        den = F.col("tmax") - F.col("tmin")
-        diff = F.col("hum_min") - F.col("hum_max")
-        flat = F.when(
-            (num == 0) | (diff == 0), F.lit(None).cast("double")
-        ).otherwise(
-            F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
-        )
-        out = joined.withColumn(
-            "hum_disagg",
-            F.when(den != 0, F.col("hum_max") + num / den * diff).otherwise(flat),
-        )
+        out = joined.withColumn("hum_disagg", _min_max_rh("temp"))
 
     elif method == "month_hour_precip_mean":
         assert month_hour_precip_mean is not None
@@ -203,13 +177,66 @@ def disaggregate_humidity(
             "hum_disagg", F.col("hum_disagg") - F.coalesce(bias, F.lit(0.0))
         )
 
-    # null-preserving clip: Spark's greatest/least skip nulls, which
-    # would turn a null (the reference's NaN) into 0.0 — keep it null
-    val = F.col("hum_disagg")
-    clipped = F.when(
-        val.isNull(), val
-    ).otherwise(F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0)))
-    return out.select(*keys, ts_col, clipped.alias("hum"))
+    return out.select(*keys, ts_col, _clip_rh("hum_disagg").alias("hum"))
+
+
+# The hourly formulas, shared by disaggregate_humidity and the
+# registry's shared-scan row: inputs are column NAMES (a Column is
+# accepted where a caller computes the input inline).
+
+
+def _rh_from_dewpoint(tdew: str | Column, temp: str) -> Column:
+    """Relative humidity [%] as the saturation vapour-pressure ratio
+    of dewpoint and air temperature (`humidity.py:63-71`)."""
+    tdew = F.col(tdew) if isinstance(tdew, str) else tdew
+    return (
+        100.0
+        * vapor_pressure(tdew, 100.0)
+        / vapor_pressure(F.col(temp), 100.0)
+    )
+
+
+def _lindew_tdew(hour: Column, tdew: str, tdew_next: str) -> Column:
+    """Hourly dewpoint of linear_dewpoint_variation: linear from the
+    day's to the next day's dewpoint plus a sine of period ``kr``;
+    eq. (20)/(21) of Debele et al. (2007) (`humidity.py:73-86`)."""
+    tdew_delta = 0.5 * F.sin(
+        (hour + 1) * F.lit(PI) / F.col("kr") - F.lit(3.0 * PI / 4.0)
+    )
+    return (
+        F.col(tdew)
+        + hour / 24.0 * (F.col(tdew_next) - F.col(tdew))
+        + tdew_delta
+    )
+
+
+def _min_max_rh(temp: str) -> Column:
+    """min_max: the hour's temperature position within the daily range
+    mapped onto the humidity range (`humidity.py:91-101`).
+
+    Flat day (tmax == tmin): the reference's numpy ratio is ±inf
+    (→ 100/0 after the clip, sign of (temp-tmin)·(hum_min-hum_max))
+    and NaN only for temp == tmin or hum_min == hum_max (0·inf); we
+    reproduce that, with NaN expressed as null."""
+    num = F.col(temp) - F.col("tmin")
+    den = F.col("tmax") - F.col("tmin")
+    diff = F.col("hum_min") - F.col("hum_max")
+    flat = F.when(
+        (num == 0) | (diff == 0), F.lit(None).cast("double")
+    ).otherwise(
+        F.when((num > 0) == (diff > 0), F.lit(100.0)).otherwise(F.lit(0.0))
+    )
+    return F.when(den != 0, F.col("hum_max") + num / den * diff).otherwise(flat)
+
+
+def _clip_rh(name: str) -> Column:
+    """Null-preserving clip to [0, 100] (`humidity.py:120`): Spark's
+    greatest/least skip nulls, which would turn a null (the
+    reference's NaN) into 0.0 — keep it null."""
+    val = F.col(name)
+    return F.when(val.isNull(), val).otherwise(
+        F.least(F.greatest(val, F.lit(0.0)), F.lit(100.0))
+    )
 
 
 def dewpoint_regression(

@@ -86,10 +86,33 @@ def _bc_transmissivity(
 
 def angstroem_expr(ssd, day_length, pot_rad_daily, a, b) -> Column:
     """Angstroem (1924): ``(a + b·ssd/daylength)·pot_rad_daily``
-    (`radiation.py:283-311`)."""
+    (`radiation.py:283-311`). ``ssd``/``day_length``/``pot_rad_daily``
+    are column names or Columns, ``a``/``b`` floats or Columns; a zero
+    day length gives null."""
+
+    def col(x):
+        return F.col(x) if isinstance(x, str) else x
+
     a_col = a if isinstance(a, Column) else F.lit(float(a))
     b_col = b if isinstance(b, Column) else F.lit(float(b))
-    return (a_col + b_col * ssd / day_length) * pot_rad_daily
+    return (a_col + b_col * F.try_divide(col(ssd), col(day_length))) * col(
+        pot_rad_daily
+    )
+
+
+def _angstroem_glob_daily(a, b) -> Column:
+    """The pot_rad_via_ssd daily total over the ``ssd``/``daylength``/
+    ``pot_rad_daily`` columns; polar nights (daylength <= 0) keep 0
+    (`radiation.py:79-87`)."""
+    return F.when(
+        F.col("daylength") > 0,
+        angstroem_expr("ssd", "daylength", "pot_rad_daily", a, b),
+    ).otherwise(F.lit(0.0))
+
+
+def _floor_glob(glob: Column) -> Column:
+    """Hourly values below 0.01 W/m² are floored to 0 (`radiation.py:99`)."""
+    return F.when(glob < 1e-2, 0.0).otherwise(glob)
 
 
 # keep reference-named aliases for API parity
@@ -182,24 +205,16 @@ def disaggregate_radiation(
             hourly = hourly.withColumn("month", F.month(ts_col)).join(
                 F.broadcast(angstr_params), [*keys, "month"], "left"
             )
-            a_col, b_col = F.col("a"), F.col("b")
+            glob_daily = _angstroem_glob_daily(F.col("a"), F.col("b"))
         else:
-            a_col, b_col = F.lit(angstr_a), F.lit(angstr_b)
-        # polar nights (daylength <= 0) keep 0 (`radiation.py:79-87`)
-        glob_daily = F.when(
-            F.col("daylength") > 0,
-            (a_col + b_col * F.try_divide(F.col("ssd"), F.col("daylength")))
-            * F.col("pot_rad_daily"),
-        ).otherwise(F.lit(0.0))
+            glob_daily = _angstroem_glob_daily(angstr_a, angstr_b)
     else:  # pot_rad_via_bc — __trans attached pre-explode above
         glob_daily = F.col("__trans") * F.col("pot_rad_daily")
 
     # polar-night days have pot_rad_daily == 0; the reference's numpy
     # 0/0 yields NaN (`radiation.py:98`) — try_divide's null matches
     glob = F.try_divide(F.col("pot_rad"), F.col("pot_rad_daily")) * glob_daily
-    glob = F.when(glob < 1e-2, 0.0).otherwise(glob)
-
-    return hourly.select(*keys, ts_col, glob.alias("glob"))
+    return hourly.select(*keys, ts_col, _floor_glob(glob).alias("glob"))
 
 
 def fit_angstroem_params(

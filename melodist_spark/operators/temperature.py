@@ -9,13 +9,13 @@ number of stations; the only shuffle is the per-station window sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from melodist_spark.functions.solar import sun_times_exprs
 from melodist_spark.util.calendar import hourly_calendar
 from melodist_spark.util.interpolate import interpolate_linear
-from melodist_spark.util.planmemo import PlanMemo
+from melodist_spark.util.planmemo import MEMO
 
 HOURS_PER_DAY = 24
 DEFAULT_SHIFT_HOURS = 2
@@ -25,9 +25,7 @@ MAX_LOC_POLAR = 18
 
 SINE_METHODS = ("sine_min_max", "sine_mean", "sine")
 MEAN_COURSE_METHODS = ("mean_course_min_max", "mean_course_mean")
-
-
-_EXPR_MEMO = PlanMemo()
+PI = 3.141592653589793
 
 
 def _loc_exprs(min_max_time: str) -> dict[str, "F.Column"]:
@@ -38,7 +36,7 @@ def _loc_exprs(min_max_time: str) -> dict[str, "F.Column"]:
     daily frame. All references are by NAME, so the built dict is
     context-free and memoized per application (round 14,
     ``util.planmemo``)."""
-    return _EXPR_MEMO.get(
+    return MEMO.get(
         ("loc", min_max_time), lambda: _loc_exprs_build(min_max_time)
     )
 
@@ -78,7 +76,7 @@ def _neighbor_exprs(keys: list[str], date_col: str) -> dict[str, "F.Column"]:
     fall back to the current day's values (`temperature.py:115-122`).
     By-name window trees (~0.24 s of py4j build) — memoized per
     application like :func:`_loc_exprs`."""
-    return _EXPR_MEMO.get(
+    return MEMO.get(
         ("neighbor", tuple(keys), date_col),
         lambda: _neighbor_exprs_build(keys, date_col),
     )
@@ -247,9 +245,14 @@ def disaggregate_temperature(
     )
 
     hourly = hourly.withColumns(
-        _EXPR_MEMO.get(("minmax_vals",), _minmax_val_exprs)
+        MEMO.get(
+            ("minmax_vals",),
+            lambda: dict(
+                zip(("__minv", "__maxv"), _smoothed_minmax("min_loc", "max_loc"))
+            ),
+        )
     )
-    temp = _EXPR_MEMO.get(
+    temp = MEMO.get(
         ("sine_temp", method, bool(mod_nighttime)),
         lambda: _sine_temp_expr(method, mod_nighttime),
     )
@@ -261,56 +264,85 @@ def disaggregate_temperature(
     return hourly.select(*keys, ts_col, *out_extras, "temp")
 
 
-def _minmax_val_exprs() -> dict[str, "F.Column"]:
-    """Smooth transitions: before the daily max use today's min, after
-    it next day's; before the daily min use yesterday's max
-    (`temperature.py:127-137`). By-name trees — memoized per
-    application (round 14, ``util.planmemo``)."""
-    min_val = F.when(
-        F.col("hour") < F.col("max_loc"), F.col("min_val_cur")
-    ).otherwise(F.col("min_val_next"))
-    max_val = F.when(
-        F.col("hour") < F.col("min_loc"), F.col("max_val_before")
-    ).otherwise(F.col("max_val_cur"))
-    return {"__minv": min_val, "__maxv": max_val}
-
-
 def _sine_temp_expr(method: str, mod_nighttime: bool) -> "F.Column":
     """The hourly sine/cosine temperature expression over the
     ``__minv``/``__maxv``/``hour``/``min_loc``/``max_loc`` columns —
     by-name, memoized per (method, mod_nighttime)."""
-    h = F.col("hour").cast("double")
+    minv, maxv = F.col("__minv"), F.col("__maxv")
     if method in ("sine_min_max", "sine"):
-        delta = F.col("__maxv") - F.col("__minv")
-        v_trans = F.col("__minv") + delta / 2.0
         if mod_nighttime:
-            # three-piece cosine (`temperature.py:145-167`)
-            span = F.col("max_loc") - F.col("min_loc")
-            before_min = h <= F.col("min_loc")
-            between = (h > F.col("min_loc")) & (h < F.col("max_loc"))
-            pi = F.lit(3.141592653589793)
-            t_before = v_trans + delta / 2.0 * F.cos(
-                F.try_divide(pi, HOURS_PER_DAY - span)
-                * (HOURS_PER_DAY - F.col("max_loc") + h)
-            )
-            t_between = v_trans + delta / 2.0 * F.cos(
-                1.25 * pi + F.try_divide(0.75 * pi, span) * (h - F.col("min_loc"))
-            )
-            t_after = v_trans + delta / 2.0 * F.cos(
-                F.try_divide(pi, HOURS_PER_DAY - span) * (h - F.col("max_loc"))
-            )
-            return (
-                F.when(before_min, t_before)
-                .when(between, t_between)
-                .otherwise(t_after)
-            )
-        return v_trans + delta / 2.0 * F.cos(
-            F.lit(2 * 3.141592653589793 / HOURS_PER_DAY) * (h - F.col("max_loc"))
-        )
-    # sine_mean (`temperature.py:172-176`)
+            return _sine_night_expr(minv, maxv, "min_loc", "max_loc")
+        return _sine_expr(minv, maxv, "max_loc")
+    return _sine_mean_expr("max_loc")
+
+
+# The formulas below take the NAMES of their location columns (and,
+# for the smoothed extremes, the Columns carrying them), so the public
+# op and the registry's shared-scan row build the same trees from one
+# definition; all read ``hour`` and the neighbour extremes of
+# :func:`_neighbor_exprs` by name.
+
+
+def _smoothed_minmax(min_loc: str, max_loc: str) -> tuple[Column, Column]:
+    """Smooth transitions: before the daily max use today's min, after
+    it next day's; before the daily min use yesterday's max
+    (`temperature.py:127-137`)."""
+    min_val = F.when(
+        F.col("hour") < F.col(max_loc), F.col("min_val_cur")
+    ).otherwise(F.col("min_val_next"))
+    max_val = F.when(
+        F.col("hour") < F.col(min_loc), F.col("max_val_before")
+    ).otherwise(F.col("max_val_cur"))
+    return min_val, max_val
+
+
+def _sine_expr(minv: Column, maxv: Column, max_loc: str) -> Column:
+    """sine_min_max: one cosine through the smoothed extremes
+    (`temperature.py:139-143`)."""
+    h = F.col("hour").cast("double")
+    delta = maxv - minv
+    v_trans = minv + delta / 2.0
+    return v_trans + delta / 2.0 * F.cos(
+        F.lit(2 * PI / HOURS_PER_DAY) * (h - F.col(max_loc))
+    )
+
+
+def _sine_night_expr(
+    minv: Column, maxv: Column, min_loc: str, max_loc: str
+) -> Column:
+    """sine_min_max with mod_nighttime: the three-piece cosine
+    (`temperature.py:145-167`)."""
+    h = F.col("hour").cast("double")
+    delta = maxv - minv
+    v_trans = minv + delta / 2.0
+    span = F.col(max_loc) - F.col(min_loc)
+    before_min = h <= F.col(min_loc)
+    between = (h > F.col(min_loc)) & (h < F.col(max_loc))
+    pi = F.lit(PI)
+    t_before = v_trans + delta / 2.0 * F.cos(
+        F.try_divide(pi, HOURS_PER_DAY - span)
+        * (HOURS_PER_DAY - F.col(max_loc) + h)
+    )
+    t_between = v_trans + delta / 2.0 * F.cos(
+        1.25 * pi + F.try_divide(0.75 * pi, span) * (h - F.col(min_loc))
+    )
+    t_after = v_trans + delta / 2.0 * F.cos(
+        F.try_divide(pi, HOURS_PER_DAY - span) * (h - F.col(max_loc))
+    )
+    return (
+        F.when(before_min, t_before)
+        .when(between, t_between)
+        .otherwise(t_after)
+    )
+
+
+def _sine_mean_expr(max_loc: str) -> Column:
+    """sine_mean: the daily mean plus half the diurnal range
+    (`temperature.py:172-176`)."""
+    h = F.col("hour").cast("double")
     dtr = F.col("max_val_cur") - F.col("min_val_cur")
     return F.col("mean_val_cur") + dtr / 2.0 * F.cos(
-        F.lit(2 * 3.141592653589793 / HOURS_PER_DAY) * (h - F.col("max_loc"))
+        F.lit(2 * PI / HOURS_PER_DAY) * (h - F.col(max_loc))
     )
 
 

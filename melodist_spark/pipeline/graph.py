@@ -34,7 +34,7 @@ Scale notes (a web host graph is ~10^8 nodes / ~10^9 edges):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["out_degrees", "pagerank"]
@@ -236,6 +236,16 @@ def _pagerank_body(
         start_it, n_cuts = 0, 0
         ranks = deg.select("node", F.lit(1.0 / n_nodes).alias("r"))
     prev_cut: DataFrame | None = None
+
+    def ordered_sum(col: str) -> Column:
+        # F.sum adds in input-partition order, so a rank table re-read
+        # from a parquet slot (split differently from a localCheckpoint)
+        # would round differently; summing the sorted values makes every
+        # reduction independent of partitioning
+        return F.aggregate(
+            F.array_sort(F.collect_list(col)), F.lit(0.0), lambda acc, x: acc + x
+        )
+
     for it in range(start_it, n_iter):
         with_deg = ranks.join(deg, "node")
         contrib = (
@@ -247,10 +257,10 @@ def _pagerank_body(
                 "src",
             )
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("__share").alias("__contrib"))
+            .agg(ordered_sum("__share").alias("__contrib"))
         )
         dangling = with_deg.filter(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("__dm")
+            ordered_sum("r").alias("__dm")
         )
         ranks = (
             deg.select("node")
@@ -289,8 +299,10 @@ def _pagerank_body(
             if prev_cut is not None:
                 _local_ck_release(prev_cut)
             prev_cut = ranks
-    # the caller's finally unpersists e/deg; safe — the returned ranks
-    # read the final cut, not e
+    # the caller's finally unpersists e/deg. The returned ranks read
+    # the last cut only when n_iter lands on one; otherwise their lineage
+    # still references e/deg, and the caller's first action recomputes
+    # them from the edge plan (correct, just not cached)
     return ranks.select("node", F.col("r").alias("pagerank"))
 
 

@@ -1312,12 +1312,15 @@ def pq_ivfpq_topk(
     once, and emits BOTH methods' per-batch top-k partials; one
     window per (method, query) ranks the tiny partial frame.
 
-    Bit-identical to the pair of public ops by construction — same
-    normalize/argmin/argmax/LUT-gather float ops in the same order
-    over the same batch boundaries (the scan partitioning is the
-    same; the per-batch argpartition tie behavior is identical on
-    identical score arrays) — and pin-tested so
-    (``test_pq_ivfpq_fused_matches_public_ops``). The fused form is
+    Every score is bit-identical to the public ops': the same
+    normalize/argmin/argmax/LUT-gather float ops run in the same
+    order. The neighbour sets are identical up to exact score ties:
+    ``ivf_pq_topk`` scans a cell-filtered corpus while this kernel
+    scans the full one, so their Arrow batch boundaries differ, and a
+    tie straddling a per-batch argpartition cut can keep a different
+    tied neighbour at the same rank. The pin
+    (``test_pq_ivfpq_fused_matches_public_ops``) is the guarantee on
+    the registry corpus. The fused form is
     the bench/deployment shape; the public ops remain the
     composable API (and the ``cell_col``/``code_col`` injection
     parameters remain the encode-once-at-ingest path).

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from melodist_spark.operators.aggregations import daily_aggs
+
 
 def _tz_timestamp(stream: DataFrame, ts_col: str) -> DataFrame:
     """Watermarks require TIMESTAMP; cast a TIMESTAMP_NTZ event-time
@@ -35,28 +37,7 @@ def streaming_daily_from_hourly(
     """
     keys = list(keys)
     stream = _tz_timestamp(stream, ts_col)
-    cols = set(stream.columns)
-    aggs = []
-    if "temp" in cols:
-        aggs += [
-            F.avg("temp").alias("temp"),
-            F.min("temp").alias("tmin"),
-            F.max("temp").alias("tmax"),
-        ]
-    if "precip" in cols:
-        aggs.append(F.sum("precip").alias("precip"))
-    if "glob" in cols:
-        aggs.append(F.avg("glob").alias("glob"))
-    if "hum" in cols:
-        aggs += [
-            F.avg("hum").alias("hum"),
-            F.min("hum").alias("hum_min"),
-            F.max("hum").alias("hum_max"),
-        ]
-    if "wind" in cols:
-        aggs.append(F.avg("wind").alias("wind"))
-    if "ssd" in cols:
-        aggs.append((F.sum("ssd") / F.lit(60.0)).alias("ssd"))
+    aggs = daily_aggs(stream.columns)
 
     return (
         stream.withWatermark(ts_col, watermark)

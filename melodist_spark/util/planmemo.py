@@ -19,11 +19,20 @@ expression), so those calls must keep building fresh. Keying on the
 active application's id means a JVM gateway restart in-process
 invalidates the cached py4j-backed trees instead of replaying stale
 ones; the cache is LRU-bounded.
+
+There is one memo per process, :data:`MEMO`; callers keep their keys
+apart by a leading tag (``("sun", ...)``, ``("frame", ...)``). A
+cached dict is handed out as a shallow copy, so a caller that adds
+to or deletes from its result cannot change what the next ``get``
+returns.
 """
 
 from __future__ import annotations
 
 from typing import Callable
+
+#: entries kept before the least recently used one is evicted
+CAPACITY = 256
 
 
 def memo_part(v):
@@ -39,12 +48,15 @@ def memo_part(v):
     return None
 
 
+def _handout(v):
+    return dict(v) if isinstance(v, dict) else v
+
+
 class PlanMemo:
     """LRU memo of built expression trees, scoped to the active Spark
     application (see module docstring)."""
 
-    def __init__(self, cap: int = 256):
-        self._cap = cap
+    def __init__(self):
         self._d: dict = {}
 
     def get(self, key_parts: tuple, build: Callable):
@@ -61,15 +73,18 @@ class PlanMemo:
             # FIFO): a hot geometry inserted first must survive
             del self._d[key]
             self._d[key] = got
-            return got
+            return _handout(got)
         out = build()
-        if len(self._d) >= self._cap:
+        if len(self._d) >= CAPACITY:
             self._d.pop(next(iter(self._d)))
         self._d[key] = out
-        return out
+        return _handout(out)
 
     def clear(self):
         self._d.clear()
 
     def __len__(self) -> int:
         return len(self._d)
+
+
+MEMO = PlanMemo()

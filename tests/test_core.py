@@ -362,3 +362,21 @@ def test_bench_anchor_rerun_budget():
     assert len(calls) == 12
     assert calls[0] == "q52"  # worst ratio first
     assert sum(len(v) for v in rr.values()) == 12
+
+
+def test_plan_memo_hands_out_copies(spark):
+    """A caller that mutates a memoized dict (adds, overwrites or
+    deletes an entry) must not change what the next ``get`` returns:
+    the memo is shared by every operator and registry row of the
+    process."""
+    from melodist_spark.util.planmemo import MEMO
+
+    key = ("test_plan_memo_hands_out_copies",)
+    first = MEMO.get(key, lambda: {"a": F.lit(1.0), "b": F.lit(2.0)})
+    kept = dict(first)
+    first["a"] = F.lit(99.0)
+    del first["b"]
+    first["c"] = F.lit(3.0)
+    again = MEMO.get(key, lambda: {"rebuilt": F.lit(0.0)})
+    assert set(again) == {"a", "b"}
+    assert all(again[k] is v for k, v in kept.items())

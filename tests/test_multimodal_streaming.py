@@ -2310,16 +2310,19 @@ def test_sun_times_memo_is_lru_not_fifo(spark):
     300 distinct geometries; under the old FIFO eviction it would be
     the first entry dropped at capacity."""
     from melodist_spark.functions import solar
+    from melodist_spark.util.planmemo import CAPACITY, MEMO
 
-    solar._SUN_TIMES_MEMO.clear()
+    MEMO.clear()
     hot_exprs = solar.sun_times_exprs("date", 11.0, 47.0, 1.0)
     for i in range(300):
         # touch the hot geometry, then insert a cold one
         again = solar.sun_times_exprs("date", 11.0, 47.0, 1.0)
-        assert again is hot_exprs  # still cached (never rebuilt)
+        # still cached (never rebuilt): the handed-out dict is a fresh
+        # copy, its Column trees the cached ones
+        assert all(again[k] is v for k, v in hot_exprs.items())
         solar.sun_times_exprs("date", float(i), 0.0, 0.0)
-    assert len(solar._SUN_TIMES_MEMO) <= 256
-    solar._SUN_TIMES_MEMO.clear()
+    assert len(MEMO) <= CAPACITY
+    MEMO.clear()
 
 
 def test_video_neardup_temporal_alignment(spark):
